@@ -1,420 +1,25 @@
-"""Benchmark harness: times every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""Per-query cost of the registered queries at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 fixture lake of TESTDATA.md) on local[$SPARK_GRAFT_CPUS].
 
-The headline suite (one query per operator family) is timed first and its
-total is the cross-round regression metric; every remaining registered query
-is then timed too, so regressions anywhere in the surface are visible
-round-over-round ("queries" holds all of them).
+    python bench.py                          # every registered query
+    python bench.py NAME [NAME ...]          # only the named queries
+    python bench.py --check                  # gate HEADLINE vs bench_baseline.json
+    python bench.py --baseline-add-new       # add rows for new queries
+    python bench.py --baseline-reprice NAME  # replace rows whose semantics changed
 
-Each query is forced end-to-end with a noop-format write (full materialization
-of every row/column the plan produces — unlike ``count()``, which lets Spark
-prune the world).  A warmup run of the flagship query absorbs JVM/codegen
-startup so the numbers reflect steady-state execution.
+One pass over the selected queries at sf0.001 absorbs JVM, codegen and
+Python-worker start-up; the memo caches are then cleared of its entries, so
+every memoized build (token sets, pair frames, edge lists, ...) is charged to
+the first timed query that consumes it.  The timing order is HEADLINE, then
+registry order, so that attribution is deterministic.  Each query is timed
+once, forced end to end by a noop write (unlike ``count()``, it lets Spark
+prune no column), recording wall seconds and the CPU seconds of the whole
+process tree: this process, the Spark JVM and its Python workers.
 
-MEASURED NOISE BAND (round 7, three identical-code 226-query runs on the
-same box): full-run totals flap +-10% and INDIVIDUAL heavy queries one-off
-4-9x in-run vs their standalone cost (e.g. graph_pagerank 9.7s mid-bench vs
-1.7s standalone, identical plans; different queries flap in different runs;
-16g vs 28g driver heap makes no difference).  Per-query cross-run ratios
-below ~2x on the heavier queries are therefore position/GC noise, not
-regressions — corroborate any single-query flag with a standalone re-run
-before treating it as real.
-
-ROOT CAUSE OF THE ONE-OFFS, PROFILED (round 9): the flap is tier-4 JIT
-latency, not GC or heap.  A storm run of the exact-Jaccard pair build
-burned 2166 CPU·s in its verify stage where the identical plan's steady
-state is 200-500 CPU·s (stage-level executorCpuTime via the UI REST API;
-GC 133s of 2527s run time, every generated method <1500 bytecodes so no
-huge-method bailout): with all 32 cores saturated by tier-3 profiled code,
-whether the one hot generated method's C2 compile lands early or late in
-the queue is luck, and a late landing multiplies the whole stage by the
-tier-3/tier-4 cost ratio (~4-10x on allocation-heavy kernels like
-array_intersect).  Storm odds rise with the amount of work submitted as
-ONE job — dedup.py now eagerly checkpoints its candidate frame to split
-the worst offender into bounded jobs (26-96s bimodal -> 10-23s cold,
-6-9s steady) — and session.py reserves 512m of code cache so the
-flush-at-240MB variant cannot add to it mid-run.  The corroboration
-protocol stands: standalone-warm is the query's true cost; in-run one-offs
-above it are queue luck.  Measured victims this round (all at-baseline
-standalone, 3-7x in-run): text_bigram_pmi, pipeline_decontaminate,
-text_oov_rate, pipeline_train_test_split, text_bm25_topk.
-
-REDUCED_SF queries run against sf0.01 instead (flagged in the JSON under
-"reduced_sf"): the exact all-pairs Jaccard twin emits ~7M pairs at sf0.1
-(the fixture corpus is a dense near-dup graph — 57% of ALL doc pairs
-qualify), which is oracle-twin duty, not the production path; the
-production-scale near-dup representative at full bench SF is
-dedup_minhash_lsh.
-
-SHARED-FRAME ATTRIBUTION (round 8, r7 verdict What's-wrong #2): the
-quadratic verified-pair frame dedup.py memoizes per (session, sf_dir) is
-consumed by four dedup queries; before round 8 its one-time build was
-charged to whichever consumer ran first, making those per-query times
-order-dependent.  The bench now materializes it right after the headline
-block (before the full loop, so it precedes every consumer; building it
-before the headline pins multi-million-row persisted frames through the
-headline measurements — observed +2x) and reports the cost as explicit
-`_shared_pair_frame_build[sfX]` entries in "queries", so every dedup
-consumer's time is its own marginal work regardless of order.  Since r10
-the memoized banded-LSH candidate checkpoint gets the same treatment
-(`_shared_lsh_candidates[sfX]`).  The four
-consumers are timed immediately after, then the pair frames are RELEASED
-(leaving 7M-row persisted frames pinned evicted other queries' caches —
-measured 2.7-5x inflation on the ann family / dedup_minhash_lsh).  The
-graph edge memo gets the same split (`_shared_edge_frame_build[sfX]`) but
-stays checkpointed for the run, as in r7.  The `_shared_*` entries count
-toward all_queries_total, never toward the headline value.
-
-BASELINE FREEZE POLICY (round 8, r7 verdict What's-wrong #1):
-bench_baseline.json is FROZEN across rounds — never refreshed wholesale at
-round end (two same-round refreshes in r7 made the 2x gate compare a run
-against its own run-family and blinded it to within-round regressions).
-The only permitted updates are (a) ADDING rows for queries that did not
-exist in the previous round, at their first benched time, via
-`python bench.py --baseline-add-new` (which refuses to touch existing
-rows), and (b) REPRICING rows whose query SEMANTICS changed (r9: the three
-rows-only-to-certification conversions) via `--baseline-reprice <names>`,
-which records every displaced value in the file's `repriced` audit map —
-a reprice is never a perf refresh.  Both recompute all_queries_total(+norm)
-from the merged map; `value`/`value_norm` (the headline gate) stay frozen.
-Shared-query rows therefore always predate the round under test.
-Round-9 reprices: the three rows-only-to-certification conversions, plus
-the `_shared_pair_frame_build[*]` line items after the verify rework
-(union-size identity + eager candidate checkpoint — a different program).
-The r9-repriced [sf0.1] value (78.4s) was an in-bench reading with full
-C2-queue exposure; the same build reads 10-23s standalone-cold and 6-9s
-steady.  Round-10 re-reprice (r10 advice, medium): after the bounded-jobs
-split below landed, the first r10 run read 8.627s — inside the 6-9s
-steady band the r9 corroboration measured — and that reading replaced the
-anomalous 78.4s (audit map keeps it).  A known-outlier frozen value would
-have blinded the ratio gate on this row and inflated
-all_queries_total(+norm) by ~70s.
-
-FIRST FROZEN-BASELINE READING (round 8): four same-code runs measured
-headline 15.6-23.8s against the r7-recorded 12.7s, with calib_sec 0.45-0.62
-vs the baseline's 0.446 and the inflation UNIFORM across untouched queries
-with unchanged plans (q1's pure scan+agg drifts exactly like the rest;
-standalone re-runs confirm).  That is host/cache drift between round
-environments — now visible instead of masked by a same-round refresh.
-Read cross-round comparisons normalized (value_norm / queries_norm) and
-corroborate any single-query flag standalone per the noise-band note.
-
-ROUND-9 PROTOCOL VALIDATION: three same-code runs under the final protocol
-(registry-wide warm pass + post-pass saprfc re-prime + saprfc timed first)
-measured headline 12.75 / 13.18 / 14.24 s raw = 0.97x / 1.11x / 1.18x of
-the frozen baseline normalized (r8 band was 1.41-1.78x), zero errors, and
-9 / 23 / 9 non-headline rows above 2x normalized per run — all in the
-2.0-3.1x band of sub-second absolute noise plus in-bench C2-queue residue
-on the two big fused line items (`_lsh_pairs_pipeline[sf0.1]` 12.1-15.7s
-in-bench vs 5.0s steady standalone; `_shared_pair_frame_build[sf0.1]`
-7.5-17.9s vs 6-9s steady).  The flagged set changes every run — the
-corroboration protocol (standalone-warm = true cost) is the read.
-
-ROUND-10 STANDALONE CORROBORATION (r9 verdict item 3: agg_rollup and
-q18_large_orders regressed in-bench two consecutive rounds, 2.28->2.79x
-and 2.21->2.80x calib): warm-standalone at sf0.1 per this protocol,
-five consecutive runs each —
-  agg_rollup        1.06-1.87s (median 1.17) @ calib 0.576 = 2.03 units
-                    vs the frozen 0.889 @ 0.446 = 1.99 units -> 1.02x
-  q18_large_orders  1.11-1.32s (median 1.20) @ calib 0.576 = 2.08 units
-                    vs the frozen 0.975 @ 0.446 = 2.19 units -> 0.95x
-Both AT baseline standalone; the two-round in-bench drift is the
-documented position/C2-queue noise band, not a regression.  Plans
-re-audited unchanged (native rollup single Expand; q18 pre-agg + join +
-TakeOrdered, plan-locked).
-
-ROUND-10 PROTOCOL VALIDATION: five full runs, zero errors each —
-headline 13.452 / 15.723 / 14.403 / 12.730 / 12.275 s raw at calib
-0.522 / 0.710 / 0.477 / 0.383 / 0.467 = 0.91x / 0.78x / 1.06x / 1.17x /
-0.92x of the frozen baseline normalized.  The fifth run followed the
-CC/kcore hybrid round-boundary rewrite and read the family AT baseline
-in-bench (graph_components 2.02s vs the 1.88 frozen row, graph_kcore
-0.80 vs 0.74, dedup CC rows well under theirs), with ONE >2x-normalized
-row total (subquery_scalar, 0.75s absolute — sub-second noise).  The bounded-jobs splits hold: `_shared_pair_frame_build
-[sf0.1]` read 8.627 / 7.337 / 6.747 / 7.096 s — four consecutive
-same-code runs inside the documented 6-9s steady band (r9 in-bench band
-was 7.5-17.9s) — and `_lsh_pairs_pipeline[sf0.1]` dropped 15.65s
-(pre-split run 1) to 7.2 / 8.2 / 8.5 s across three same-code runs once
-its split landed (steady standalone 5.0s plus the sf0.1 tokenize now
-charged to its stage 1).  Rows above 2x normalized per run: 8 / 0 / 4 /
-4 (r9 band was 9-23), all sub-second absolutes or the pre-split run's
-LSH item; the repriced text_numericalize row (0.776 -> 1.886,
-audit-mapped) prices its distributed-rank rewrite — standalone-
-corroborated 1.52-2.13s over five warm sf0.1 runs @ calib 0.548 — the
-single-task global vocab window it replaced was the r9 verdict's one
-scale-grade defect, and a frozen pre-rewrite row would compare two
-different programs.
-
-ROUND-11 STANDALONE CORROBORATION (r10 verdict item 1:
-agg_approx_distinct_error was the only registry row >2x raw vs the frozen
-baseline, 1.235s in-bench vs the 0.592 frozen row = 2.09x): warm-standalone
-at sf0.1 per this protocol, five consecutive runs —
-  agg_approx_distinct_error  1.354 / 1.298 / 1.060 / 0.749 / 0.698 s
-                             (median 1.06) @ calib 0.536 = 1.98 units
-                             vs the frozen 0.592 @ 0.446 = 1.33 units
-                             -> 1.49x normalized (1.79x raw)
-Under the 2x gate standalone; the trailing runs settle at 0.70-0.75s
-(~0.9x normalized) once the three pruned single-column scans are
-page-cache-hot, so the in-bench 2.09x read was position noise on a
-~1-second absolute row.  The three-agg split (Expand avoidance,
-relational.py) re-confirmed as the right plan on this build — the split
-rows time at baseline once warm.
-
-ROUND-11 PROTOCOL VALIDATION: three same-code runs, zero errors each —
-headline 17.786 / 16.527 / 17.918 s raw at calib 1.105 / 0.887 / 0.634 =
-16.10 / 18.63 / 28.26 normalized (0.57-1.00x of the frozen baseline).
-THIS ROUND'S HOST IS MATERIALLY SLOWER AND NOISIER than r10's: calib
-0.63-1.11 vs r10's 0.38-0.71, and the 19 headline rows inflate a uniform
-~1.4x raw median against the r10 run (q18/agg_rollup/ann at 0.9-1.0x,
-the scan-bound rows at 1.4-2.0x) — the r8-documented host-drift class;
-read normalized.  Band check on the two fused line items (r10 verdict
-item 5): `_lsh_pairs_pipeline[sf0.1]` 7.5 / 6.3 / 10.0 s — in or near
-its 7.2-8.5s r10 band under the drift.  `_shared_pair_frame_build
-[sf0.1]` 49.2 / 20.1 / 35.8 s in-bench, OUTSIDE its 6-9s band — but
-standalone-warm corroboration reads 18.5-25.4s over three passes at
-calib 0.60-0.90 on dedup.py byte-identical to r10 (`git diff
-b1ca9da..HEAD -- .../operators/dedup.py` is empty), so the inflation is
-the environment's shuffle+checkpoint path (pure-CPU calib inflates
-1.3-1.9x, this memory/IO-heavy build ~2.5-3x; direct-write measured
-377 MB/s), not a code regression.  NO reprice: the frozen row stands,
-next same-class host should read the old band; the item remains the
-documented in-bench noise magnet (r9 band 7.5-17.9s on a faster box).
-
-A FOURTH same-code run later in the session CONFIRMS the transient-host
-read: calib back at 0.435 (r10-class), headline 11.320 s raw = 0.92x
-of the frozen baseline normalized — the fastest raw headline of any
-round — with `_shared_pair_frame_build[sf0.1]` at 9.92 s, back at its
-band edge.  `_lsh_pairs_pipeline[sf0.1]` spiked to 51.5 s on that run
-instead (6.3-10.0 s on runs 1-3, same code): the two big fused items
-trade one-off spikes across runs, the r9-documented noise-magnet
-behavior — standalone-warm remains the only honest read for both.
-Immediately-following standalone-warm corroboration of the spiked item:
-6.51 s total (0.48 / 2.20 / 3.83 per stage) @ calib 0.390 — squarely in
-its band.  Zero errors on all four runs (255 rows each).
-
-ROUND-12 PROTOCOL VALIDATION: three same-code runs on a recovered host
-(calib 0.475 / 0.582 / 0.447 — r10-class, every run under the new
-host-drift gate's 0.669 threshold), zero errors each — headline 15.637 /
-12.474 / 11.404 s raw = 1.16x / 0.75x / 0.90x of the frozen baseline
-normalized.  Rows above 2x normalized per run: 2 / 2 / 1, every one a
-sub-3s absolute and a DIFFERENT set each run (run 1's stream_tumbling_agg
-4.7x read 0.895 s at baseline in run 2) — the moving-window noise
-signature, not regressions.  The two fused line items traded their usual
-one-off spikes (r11-documented behavior): `_shared_pair_frame_build
-[sf0.1]` 15.2 / 7.5 / 7.7 s and `_lsh_pairs_pipeline[sf0.1]` 6.0 / 13.0 /
-5.5 s — run 3 reads BOTH in their 6-9 s / 5.0-8.5 s bands simultaneously
-at exactly-baseline calib (0.447 vs the frozen 0.446), closing the r11
-verdict's band-watch item on a same-class host.  bench_out_certified.json
-holds run 3 (the gate's in-band refresh path, first exercised this
-round).  The round's two additions price at 0.51-1.65 s
-(saprfc_pushdown_suffix_contains) and 1.85-3.11 s (saprfc_stream_pushdown
-— a full AvailableNow drain through the microbatch engine; its batch twin
-saprfc_pushdown reads 0.5 s).
-
-A FOURTH same-code-class run after the late-round trim-layer rework
-(the only post-run-3 change to a timed path — _py_cast/read() now
-space-trim + <=0x20-trim instead of str.strip): calib 0.488, headline
-13.066 s raw = 0.94x normalized, zero errors, BOTH fused items in-band
-again (7.24 / 7.12 s), and the saprfc family at its steady band
-(saprfc_scan_typed 0.604 s vs 0.60-0.67 s across runs 1-3) — the rework
-is perf-neutral on the hot parse loop.  13 rows >2x normalized, all
-sub-8s absolutes at baseline in runs 1-3 (the rotating-set noise
-signature; none touch the changed code).  bench_out_certified.json now
-holds this final-code run.
-
-Standalone corroboration of the round's noisiest new row,
-saprfc_stream_pushdown (1.85 / 2.44 / 6.65 s in-bench across runs): five
-consecutive warm standalone drains read 2.03-2.23 s @ calib 0.636 — a
-tight ~2.1 s band (microbatch-engine drain dominated), so the 6.65 s
-run-4 reading was position noise and the 3.109 s seeded baseline row is
-conservative-but-in-family.
-
-ROUND-13 PROTOCOL VALIDATION (warmup 7 — the verify-kernel pre-compile —
-live; per-stage `stage_diag` + `c2_spike` flag added): three same-code
-runs, zero errors each — headline 14.055 / 13.495 / 15.011 s raw =
-0.91x / 0.97x / 0.74x of the frozen baseline normalized (run 3's calib
-0.710 tripped the host-drift gate, correctly: its artifact is stamped
-`host_drift: true` and bench_out_certified.json holds run 2).
-STRUCTURAL RESULT, PARTIAL: `_shared_pair_frame_build[sf0.1]` read
-7.31 / 6.60 / 8.17 s — IN BAND (6-9 s) ALL THREE RUNS, the first
-three-for-three round since the bimodality was documented (r10-r12 each
-had a ~5x committed-artifact spike; warmup 7 pre-compiles exactly this
-item's verify kernel, so the fix holds for it).  NEGATIVE RESULT,
-DOCUMENTED: `_lsh_pairs_pipeline[sf0.1]` read 27.9 / 15.1 / 7.5 s —
-still bimodal despite the same pre-compile; stage_diag localizes the
-spike to its VERIFY stage (run 2: 11.77 s of the 15.1 vs 5.07 s in
-run 3's in-band read), i.e. a late C2 landing on a hot method the
-synthetic warm pass does not reach (the 8M-row checkpoint-scan +
-length-prune + intersect pipeline saturates all 32 cores at sf0.1; the
-250k-pair synthetic run cannot reproduce that contention window).  Per
-the r12 brief this negative result is now PRICED IN THE ARTIFACT: any
-fused row >2x its frozen normalized baseline carries an explicit
-`c2_spike` flag plus the per-stage breakdown, so readers stop
-re-deriving the explanation (run 2's artifact flags exactly
-{_lsh_pairs_pipeline[sf0.1]: 15.085}).
-
-The round's one new row, saprfc_stream_incremental (two full
-AvailableNow parquet-sink runs against one checkpoint with the mock
-table growing between them): 14.88 / 9.98 / 5.75 s in-bench across the
-three runs; five consecutive warm STANDALONE runs read a tight
-4.98-5.49 s band (two microbatch-engine drains + parquet sink commit
-dominate — its single-run cousin saprfc_stream_scan reads ~2.1 s), so
-the in-bench tail is position noise and the 9.976 s baseline row seeded
-from run 2 is conservative-but-in-family (the suffix_contains
-precedent).
-
-A FOURTH same-code-class run after the NE-clause extension of
-saprfc_stream_pushdown (the only post-run-3 change to a timed path —
-its spec gains `ROLLNAME NE 'ROLL7'`, a semantics change): calib 0.455
-(near-baseline), headline 12.104 s raw = 0.94x normalized, zero errors,
-BOTH fused items in-band again (pair build 9.67 s = 1.10x normalized —
-four-for-four this round; LSH 7.22 s), only 3 rows >2x normalized (all
-sub-second absolutes, the rotating-noise signature).
-bench_out_certified.json holds this final-code run.  The changed query
-read 2.089 s (it now ships fewer wire rows) and its baseline row was
-REPRICED from this run per the semantics-change policy (old 3.109 s in
-the `repriced` audit map); saprfc_stream_incremental read 6.93 s,
-inside its corroborated family.
-
-ROUND-14 PROTOCOL VALIDATION (warmup 8 — the REAL-sf0.01-pipeline
-pre-compile immediately before the sf0.1 fused build — live; the r13
-brief's last cheap attempt at the _lsh_pairs_pipeline bimodality):
-three same-code runs, zero errors each, calib 0.441 / 0.436 / 0.484
-(all in the frozen band) — headline 20.99 / 11.29 / 15.07 s raw =
-1.67x / 0.91x / 1.10x of the frozen baseline normalized.  Run 1 was a
-HOST-NOISE run the calib probe cannot see (all 19 headline rows,
-JVM-side included, inflated a uniform ~1.2-2x at a normal calib —
-multi-core contention the single-threaded calibration doesn't sample;
-runs 2-3 read the suite at its usual band, and run 2 is the fastest
-raw headline of any round at 11.289 s).
-STRUCTURAL RESULT, POSITIVE — ITEM CLOSED: `_lsh_pairs_pipeline
-[sf0.1]` read 6.864 / 7.717 / 7.900 s — IN ITS 7-9 s BAND ALL THREE
-RUNS, the first three-for-three since the bimodality was documented
-(r13 read 27.9 / 15.1 / 7.5 with only the synthetic warmup 7); its
-verify stage read a flat 6.15 s in every run's stage_diag.  Warming
-the factored verify kernel on the real sf0.01 pipeline product —
-checkpoint scan + length prune + intersect, the frame shapes the
-synthetic pass couldn't reproduce — is what the synthetic warmup
-lacked.  RESIDUAL, PRICED: `_shared_pair_frame_build[sf0.1]` (the
-OTHER fused item, 4-for-4 in band in r13) read 11.94 / 6.37 / 17.67 s
-— run 3's spike is verify-stage-localized (14.63 s of the 17.67) and
-carries the c2_spike flag in its artifact; the class verdict stands as
-priced (a late C2 landing can still hit whichever fused verify runs
-when the queue is saturated; the flag + stage_diag is the permanent
-answer per the r13 brief, and no further rounds go to it).
-
-The round's two new rows, standalone-corroborated warm on local[32]
-(5 runs each): saprfc_pushdown_disjunction 0.539-0.691 s,
-saprfc_stream_projection 1.794-2.11 s.  In-bench they read
-2.499 / 0.561 / 2.912 and 4.156 / 2.14 / 7.916 across the three runs —
-the streaming/datasource position-noise class (the stream_scan
-precedent).  Their baseline rows are seeded from run 1 (2.499 / 4.156,
-~2x the standalone band): the stream_incremental precedent —
-conservative-but-in-family seeds absorb in-bench position noise
-instead of false-flagging >2x rows every future round.
-
-A FOURTH same-code-class run after the end-of-round self-review fixes
-(the stream restart lo-clamp — two integer compares on the stream
-partitions() path, the only post-run-3 timed-path change — plus loud
-empty-In rendering, not on any timed path): calib 0.480, zero errors,
-headline 11.391 s raw = 0.83x of the frozen baseline normalized, and
-**zero rows >2x normalized** — the first zero-spike full run of any
-round (r13's best had 7).  Both fused items in band (pair build
-9.354 s; LSH pipeline 4.935 s, BELOW its frozen 5.026 row, verify
-stage 3.29 s) — warmup 8 four-for-four on the LSH item across the
-round.  The stream family reads at its steady band
-(scan 1.797 / pushdown 1.833 / projection 1.90 / incremental 4.1 s),
-confirming the lo-clamp perf-neutral.  bench_out.json /
-bench_out_certified.json hold this final-code run.
-
-ROUND-15 PROTOCOL VALIDATION (multi-core calib probe live — the r14
-verdict item 3; plus the OPTIONS 72-char wire-line wrap on the saprfc
-family, perf-neutral to negative: the family read AT or BELOW its r14
-certified numbers in every run).  The round landed on a host with
-WAVE-SHAPED multi-core contention the 1-core calib never saw — the
-exact blind spot the new probe closes, observed live:
-  run 1: calib 0.432 (normal), mc 0.614 start / 0.770 end, headline
-    15.36 s raw, 28 rows >2x normalized — pre-seed, gate not yet armed;
-    its mc readings vs the measured idle band (0.51-0.54 with the warm
-    idle JVM present; 0.40-0.49 bare) are what sized the baseline seed
-    (calib_mc_sec 0.52) and the tighter factor (1.3x: the probe is pure
-    Python, no JIT/GC variance to absorb).
-  run 2: calib 0.455, mc 0.494/0.604 — sampled in a trough between
-    waves, gate passed, headline 15.84 s raw / 1.22x norm with 10 small
-    spikes; the degraded profile outran the two-sample gate (lesson
-    recorded: when an artifact looks degraded, certified restores from
-    git and the run repeats clean).
-  run 3 (post review fixes): calib 0.445, mc 0.519 start / 1.149 END —
-    the contention wave arrived MID-RUN and the gate CAUGHT it:
-    {"host_drift": true, "host_drift_mc": true}, certified NOT
-    refreshed, 32 rows >2x (pair build 43.7 s) all the documented
-    whole-run-noise class.  BENCH_r14's failure mode (judge needed
-    standalone corroboration to clear 15 spike rows) now self-flags.
-  Out-of-bench corroboration of the wave: mc read 0.92-0.94 on an idle
-    box mid-window while agg_rollup read 1.8-2.5 s standalone
-    (vs its 0.47-0.75 judge band) — host, not code.
-Standalone bands on the quiet host: saprfc_pushdown_line_wrap (the
-round's one new row) 0.89-1.19 s warm over 5 runs; its baseline row is
-seeded from an in-band run per the conservative-seed policy.
-  run 4 (post review fixes, same code as 3): calib 0.470, mc
-    0.595/0.536 — gate passed, 3 rows >2x (two the documented fused/c2
-    class + one ann one-off), headline 15.04 s raw = 1.13x norm.
-  run 5 (same code): calib 0.487, mc 0.635/0.513 — gate passed,
-    13 small spikes, headline 15.46 s raw = 1.12x norm.
-READING: all five runs show a UNIFORM 1.15-1.3x inflation across every
-headline row including untouched JVM-side TPC-H (run 4 vs the r14
-certified: saprfc_scan 0.69/0.51, q18 1.43/0.83, dedup_simhash
-1.36/0.94 — one factor, no outlier), while the bare-idle mc band
-matches the seed day; the day's host is simply slower under sustained
-multi-core load, and the per-query code paths are unregressed (the
-changed saprfc family reads AT or BELOW its r14 certified numbers in
-every run).  bench_out_certified.json holds run 5 per the mechanical
-most-recent-in-band policy; the gate's job this round was proven by
-run 3's mid-run flag.
-
-ROUND-16 PROTOCOL VALIDATION (per-query suspect re-run + mid-run mc
-sample + --changed spot mode live — the r15 verdict item 1/4 hardening):
-three full runs on a wave-contended host —
-  run 1 (round-start code): calib 0.474, mc 0.867/0.547/1.201 — gate
-    FLAGGED (the baseline read for the round); the suspect machinery's
-    first firing re-ran q1_pricing_summary 1.672 -> 1.132 s with both
-    readings in the suspect_reruns audit map.
-  run 2 (final code): calib 0.556, mc 0.612/0.855/0.458 — the MID
-    sample alone caught a wave the start/end samples bracket-missed
-    (the exact BENCH_r14 shape the r15 verdict asked the mid sample to
-    close); gate FLAGGED, certified not refreshed, random rows 10-20x
-    (q2 20.6 s vs 0.86 s standalone minutes earlier).
-  run 3 (final code, launched after polling the mc probe to a calm
-    0.414): calib 0.640, mc 0.501/0.522/0.548 — gate PASSED, zero
-    errors, zero suspect re-runs needed, headline 14.847 s raw =
-    23.198 normalized (0.82x the frozen value_norm — the best
-    normalized headline of any round), all-rows total 354.6 s (r15
-    committed runs: 401-513 s).  bench_out_certified.json holds this
-    run.  The bitset-verify rework (r16) reads
-    _shared_pair_frame_build[sf0.1] = 5.200 s (tokenize 0.229 /
-    candidates 3.896 / verify 1.075 — the verify stage was 22.7-43.4 s
-    in the r15 artifacts) and dedup_incremental_jaccard = 4.475 s
-    in-bench / 1.58-2.0 s standalone (r15 band 7.8-9.1 s).  9 rows read
-    >2x frozen normalized, every one corroborated standalone at band
-    immediately after (containment 2.7-4.2 vs 17.9 in-bench,
-    text_bigram_pmi 1.6-2.1 vs 8.7, lsh verify 0.87 warm vs 11.9 — the
-    documented first-heavy-execution C2/position class; the rest
-    sub-3s absolutes).  NO baseline rows repriced: the reworked line
-    items read BELOW their frozen rows, so the comparison stays valid
-    and the additions-only freeze property holds.
-  run 4 (same code, second calm-mc window): calib 0.990 (the 1-core
-    sample DOUBLED while mc read a calm 0.491/0.511/0.437 — the inverse
-    of the r14 blind spot, and the 1c gate correctly held the certified
-    refresh), **zero rows >2x frozen normalized** (ties r14's best
-    zero-spike run), zero errors, all-rows total 265.8 s raw, headline
-    14.387 s raw; the suspect machinery re-ran q3_shipping_priority
-    5.081 -> 0.957 s.  Reworked items: pair build 13.054 s in-bench
-    (verify 5.548 — position variance on a 1.1-5.5 s stage, vs
-    22.7-43.4 s before the rework), incremental 2.496 s, containment
-    3.475 s, pmi 1.955 s, LSH pipeline 9.065 s (verify 6.957 in-bench
-    vs 0.87 s warm standalone — the priced class, now on a sub-second
-    kernel).
+The full result goes to bench_out.json beside this script.  The last stdout
+line is one JSON object of at most 2,000 chars holding ``metric``/``value``
+(headline wall total)/``unit``/``sf`` and the per-query ``queries`` (wall)
+and ``queries_cpu`` maps of the headline (or named) queries.
 """
 
 from __future__ import annotations
@@ -425,14 +30,11 @@ import re
 import sys
 import time
 
+HERE = os.path.dirname(os.path.abspath(__file__))
+
 # Headline set: one per operator family (relational agg, join incl. as-of,
 # window, ingest parse, dedup, ANN, text, multimodal, UDF surface).
 HEADLINE = [
-    # saprfc first: its Python-datasource workers idle out of the reuse
-    # pool on a ~1 min timeout, so its reading depends on how close it is
-    # timed to the last worker re-prime (warmup 6b) — measured 0.43-0.52s
-    # adjacent vs 0.89-1.37s when ten queries separate them.  Every other
-    # headline query is JVM-side and position-insensitive post-warm.
     "saprfc_scan_typed",
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -454,137 +56,40 @@ HEADLINE = [
     "stream_tumbling_agg",
 ]
 
-# query -> scale-factor directory NAME (resolved against the configured
-# data root, not a hardcoded absolute path).  r6 verdict item 5: ONLY the
-# genuinely quadratic exact ORACLES stay reduced; everything with a claimed
-# sub-quadratic scale path benches at the full SF.
+# query -> scale-factor directory NAME, resolved beside $SPARK_GRAFT_SF_DIR.
+# Only the genuinely quadratic exact oracles run reduced: their output volume
+# is quadratic in the fixture, whose corpus is a dense near-dup graph (57% of
+# all doc pairs reach Jaccard 0.6 at sf0.1).
 REDUCED_SF = {
-    # exact all-pairs Jaccard twin: ~7M qualifying pairs at sf0.1 (57% of
-    # ALL doc pairs in the dense fixture) — pure oracle duty; the
-    # production near-dup path at full SF is dedup_minhash_lsh
+    # exact all-pairs Jaccard twin: ~7M qualifying pairs at sf0.1
     "dedup_jaccard_pairs": "sf0.01",
-    # recall anchor = the exact twin filtered at 0.7 — same quadratic
-    # output volume by construction
+    # recall anchor = the exact twin filtered at 0.7
     "dedup_minhash_recall": "sf0.01",
-    # since r9 the registry entry is the recall-mass certification, which
-    # consumes the exact twin too — same oracle-duty reduction; the
-    # PRODUCTION banded-LSH pipeline keeps its full-SF reading as the
-    # `_lsh_pairs_pipeline[...]` line item below
+    # the recall-mass certification, which consumes the exact twin too
     "dedup_minhash_lsh": "sf0.01",
-    # NOT reduced — dedup_incremental_jaccard (batch-vs-corpus) and
-    # dedup_cluster_canonical (contraction CC + window argmax) claim
-    # sub-quadratic SCALING and so bench at full SF; note their sf0.1 wall
-    # time is dominated by the FIXTURE's pathological pair density (57% of
-    # all doc pairs qualify at 0.6 — the batch x corpus qualifying-pair
-    # mass is ~2.3M rows), not by the operators' asymptotics.  The
-    # ONE-TIME session build of the exact verified-pair frame (quadratic
-    # oracle duty, ~7M pairs at sf0.1) is since round 8 materialized up
-    # front and reported as `_shared_pair_frame_build[...]` line items
-    # (see SHARED-FRAME ATTRIBUTION in the module docstring), so
-    # dedup_cluster_canonical's number is its own marginal work
-    # (contraction CC + one window pass).
-    # dedup_connected_components IS reduced: it computes connected
-    # components OVER the quadratic pair set — its input is the oracle
-    # twin's output, so it inherits the same volume (the contraction
-    # kernel itself is benched at full SF via dedup_cluster_canonical)
+    # components over the exact twin's pair set
     "dedup_connected_components": "sf0.01",
-    # perceptual-hash near-dup pairs: the OUTPUT is cluster-quadratic on
-    # this fixture (only ~91*256 distinct synthetic images exist, so equal
-    # aHashes form large clusters -> ~1.1M qualifying pairs at sf0.1);
-    # the banding operator itself shuffles 4 narrow rows per image
+    # ~91*256 distinct synthetic images, so equal aHashes form large
+    # clusters: ~1.1M qualifying pairs at sf0.1
     "mm_ahash_neardup": "sf0.01",
 }
-
 
 # headline time must stay within this factor of bench_baseline.json (plus a
 # small absolute slack for sub-second noise) under --check
 CHECK_FACTOR = 1.5
 CHECK_SLACK_SEC = 0.3
 
-# HOST-DRIFT VALIDITY GATE (round 12, r11 verdict item 1): the committed
-# BENCH_rN artifact chain is the only cross-round perf signal, and round 11
-# snapshotted a run taken on a degraded host (calib 1.105 vs the frozen
-# 0.446 — 52 rows read >2x normalized in-bench, every one at baseline
-# standalone).  A run whose start calibration exceeds this factor of the
-# frozen baseline's calib is stamped {"host_drift": true} in both the full
-# and compact JSON lines, and does NOT refresh bench_out_certified.json —
-# the committed copy of the most recent run whose calib was in the frozen
-# band, which drifted artifacts point readers to via "certified_results".
-CALIB_DRIFT_FACTOR = 1.5
-
-# PER-QUERY SUSPECT FACTOR (round 16, r15 verdict item 1): a timed headline
-# row reading above this multiple of its frozen normalized band (converted
-# to seconds at this run's calib, plus CHECK_SLACK_SEC for sub-second rows)
-# is re-run up to twice and reports the min — see the suspect-re-run block
-# in main().
-SUSPECT_FACTOR = 1.5
-
-# The multi-core probe gets a TIGHTER factor: it is pure Python (no JIT /
-# codegen / GC variance — the reasons the 1-core Spark calib needs 1.5x),
-# and its measured idle band is narrow (0.51-0.54 s with the warm idle
-# JVM present, the context both in-bench samples run in; 0.40-0.49 s bare).
-# The baseline seed 0.52 is the top of that in-context idle band, so the
-# gate fires at ~0.68 — r15 protocol run 1, a mildly-contended run with 28
-# rows >2x at a NORMAL 1-core calib (0.432), read mc 0.614/0.77 and would
-# have been flagged; clean runs hold ~25% headroom.
-CALIB_MC_DRIFT_FACTOR = 1.3
-
-
-def _calib_mc_worker(n: int) -> int:
-    """Fixed pure-Python integer-hash loop (FNV-ish), the per-process unit
-    of the multi-core calibration probe."""
-    h = 0
-    mask = (1 << 64) - 1
-    for i in range(n):
-        h = ((h * 1099511628211) ^ i) & mask
-    return h
-
-
-def run_calib_mc() -> float:
-    """MULTI-CORE host calibration (round 15, r14 verdict item 3): the
-    single-threaded `run_calib` sample cannot see multi-core contention —
-    twice in r14 the same code read wildly different full-run profiles at
-    a NORMAL calib (the builder's protocol run 1: every row uniformly
-    1.2-2x slow; the driver's BENCH_r14: a contiguous 15-row spike block,
-    all judge-corroborated at band standalone).  This probe runs the same
-    class of fixed hash loop on EVERY core simultaneously (one process
-    per CPU, fork pool), so background load that steals cores stretches
-    it roughly linearly while leaving the 1-core sample untouched — the
-    exact signature that separates 'host was contended' from 'engine
-    regressed'.  Recorded as calib_mc_sec_start/_end; the drift gate
-    flags when EITHER sample family exceeds CALIB_DRIFT_FACTOR x its
-    frozen-baseline twin."""
-    import multiprocessing as mp
-
-    nproc = min(32, os.cpu_count() or 1)
-    n = 2_000_000  # ~0.25 s of pure-Python hashing per process when idle
-    t0 = time.perf_counter()
-    try:
-        with mp.get_context("fork").Pool(nproc) as pool:
-            # bounded wait (r15 review): fork from this multi-threaded
-            # driver (JVM gateway, py4j/log threads) can copy a held lock
-            # into a child, deadlocking a worker — an unbounded map would
-            # then hang the whole bench instead of degrading; on timeout
-            # the pool context's terminate() reaps the children
-            pool.map_async(_calib_mc_worker, [n] * nproc).get(timeout=60)
-    except Exception as e:
-        print(f"[bench] multi-core calib probe failed: {e!r}", file=sys.stderr)
-        return 0.0  # falsy: gate treats the probe as unavailable
-    return round(time.perf_counter() - t0, 3)
+COMPACT_MAX_CHARS = 2000
 
 
 def baseline_add_new() -> None:
     """Merge rows for NEW queries from bench_out.json into
-    bench_baseline.json — the only update the freeze policy permits.
-    Existing rows are never touched; run after benching a round that
-    added queries.  Refuses a bench_out produced at a different scale
-    factor than the baseline's (a quick sf0.01 local run must never seed
-    permanent rows into the sf0.1 gate), and skips rows for queries that
-    errored in the run."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "bench_out.json")) as fh:
+    bench_baseline.json.  Existing rows are never touched.  Refuses a
+    bench_out produced at a different scale factor than the baseline's, and
+    skips rows for queries that errored in the run."""
+    with open(os.path.join(HERE, "bench_out.json")) as fh:
         out = json.load(fh)
-    with open(os.path.join(here, "bench_baseline.json")) as fh:
+    with open(os.path.join(HERE, "bench_baseline.json")) as fh:
         base = json.load(fh)
     if out.get("sf") != base.get("sf"):
         sys.exit(
@@ -599,18 +104,15 @@ def baseline_add_new() -> None:
             if name in out.get("queries_norm", {}):
                 base.setdefault("queries_norm", {})[name] = out["queries_norm"][name]
             added.append(name)
-    # row count of the queries map (includes the _shared_* line items)
     base["n_queries"] = len(base["queries"])
-    # keep the summary totals equal to the sum of the (merged) queries map
-    # so cross-round readers of the baseline file see consistent numbers;
-    # `value`/`value_norm` (the headline gate) remain frozen at the r7
-    # snapshot because the HEADLINE set itself is frozen.
+    # `value`/`value_norm` (the headline gate) stay frozen because the
+    # HEADLINE set itself is frozen; only the all-rows totals follow the map
     base["all_queries_total"] = round(sum(base["queries"].values()), 3)
     if "queries_norm" in base:
         base["all_queries_total_norm"] = round(
             sum(base["queries_norm"].values()), 3
         )
-    with open(os.path.join(here, "bench_baseline.json"), "w") as fh:
+    with open(os.path.join(HERE, "bench_baseline.json"), "w") as fh:
         json.dump(base, fh, indent=1)
         fh.write("\n")
     print(f"baseline: added {len(added)} new rows {added}; "
@@ -618,17 +120,13 @@ def baseline_add_new() -> None:
 
 
 def baseline_reprice(names: list[str]) -> None:
-    """Replace the frozen rows of queries whose SEMANTICS changed (a
-    conversion that altered what the query computes — r9: the three
-    rows-only retirements), taking fresh readings from bench_out.json and
-    keeping every displaced value in a `repriced` audit map so the change
-    is visible cross-round.  This is NOT a perf refresh: the freeze policy
-    stands for every unchanged query, and comparing a converted query
+    """Replace the frozen rows of queries whose SEMANTICS changed with
+    fresh readings from bench_out.json, keeping every displaced value in a
+    `repriced` audit map.  Not a perf refresh: comparing a converted query
     against its pre-conversion row would measure two different programs."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "bench_out.json")) as fh:
+    with open(os.path.join(HERE, "bench_out.json")) as fh:
         out = json.load(fh)
-    with open(os.path.join(here, "bench_baseline.json")) as fh:
+    with open(os.path.join(HERE, "bench_baseline.json")) as fh:
         base = json.load(fh)
     if out.get("sf") != base.get("sf"):
         sys.exit(
@@ -654,818 +152,191 @@ def baseline_reprice(names: list[str]) -> None:
         base["all_queries_total_norm"] = round(
             sum(base["queries_norm"].values()), 3
         )
-    with open(os.path.join(here, "bench_baseline.json"), "w") as fh:
+    with open(os.path.join(HERE, "bench_baseline.json"), "w") as fh:
         json.dump(base, fh, indent=1)
         fh.write("\n")
     print(f"baseline: repriced {names} (old values kept in 'repriced' audit "
           f"map); all other rows untouched", file=sys.stderr)
 
 
-def bench_changed(names: list[str]) -> None:
-    """CHANGED-QUERY SPOT BENCH (round 16, r15 verdict item 4): time ONLY the
-    named queries at $SPARK_GRAFT_SF_DIR — point it at the largest fixture
-    present (e.g. sf0.1 when the graded runs are noise-bound, or a bigger
-    generated dir) so scale-shaped wins (q2's 98% shuffle cut) are measurable
-    instead of invisible under sub-second overhead.  Three reps per query
-    (first = cold-ish, min = steady); REDUCED_SF redirects still apply so the
-    quadratic oracle twins cannot be pointed at an SF they were never meant
-    to run at.  Prints one JSON line; never touches bench_out.json,
-    bench_out_certified.json or the frozen baseline."""
+def exited_cpu_s(before: dict, after: dict) -> float:
+    """CPU·s that ``tree_cpu_s(after) - tree_cpu_s(before)`` wrongly takes
+    off for processes of the ``before`` tree that are gone ``after`` (both
+    ``proctree.tree`` maps).  An exited child normally moves its CPU·s into
+    its parent's cutime + cstime, so it is counted once.  The pyspark daemon
+    ignores SIGCHLD, so the kernel reaps its workers without doing so: a
+    worker stopped after a minute idle takes its lifetime CPU·s with it
+    (per-query CPU·s read down to -178 s).  Such a child is given back."""
+    def children(st: list[str]) -> int:
+        return int(st[13]) + int(st[14])
+
+    lost = 0
+    for p, st in before.items():
+        if p in after:
+            continue
+        q = int(st[1])  # fields after the name: ppid is 1, utime..cstime 11..14
+        absorbed = children(after[q]) - children(before[q]) if q in after and q in before else 0
+        total = sum(int(x) for x in st[11:15])
+        if absorbed < total:
+            lost += total
+    return lost / os.sysconf("SC_CLK_TCK")
+
+
+def check(wall: dict[str, float]) -> None:
+    """Exit 1 when a headline row exceeds CHECK_FACTOR x its baseline row
+    plus CHECK_SLACK_SEC."""
+    with open(os.path.join(HERE, "bench_baseline.json")) as fh:
+        base = json.load(fh)["queries"]
+    bad = [
+        f"{name}: {wall[name]:.2f}s vs baseline {base[name]:.2f}s "
+        f"(>{CHECK_FACTOR}x + {CHECK_SLACK_SEC}s)"
+        for name in HEADLINE
+        if name in base
+        and name in wall
+        and wall[name] > CHECK_FACTOR * base[name] + CHECK_SLACK_SEC
+    ]
+    # chatter goes to stderr so the JSON stays stdout's last line
+    if bad:
+        print("PERF REGRESSION vs bench_baseline.json:\n" + "\n".join(bad),
+              file=sys.stderr)
+        sys.exit(1)
+    print(f"perf check OK: {len([n for n in HEADLINE if n in wall])} "
+          f"headline queries within {CHECK_FACTOR}x of baseline",
+          file=sys.stderr)
+
+
+def main(names: list[str], gate: bool = False) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    data_root = os.path.dirname(sf_dir.rstrip("/")) or "."
+    # fall back to the bench SF when the sibling dir doesn't exist
     reduced = {
-        name: os.path.join(os.path.dirname(sf_dir.rstrip("/")) or ".", leaf)
+        name: os.path.join(data_root, leaf)
         for name, leaf in REDUCED_SF.items()
+        if os.path.isdir(os.path.join(data_root, leaf))
     }
-    reduced = {n: p for n, p in reduced.items() if os.path.isdir(p)}
+    warm_sf = os.path.join(data_root, "sf0.001")
 
     import __spark_entry__ as entrymod
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.caches import (
+        clear_caches,
+    )
     from guidance_for_sap_data_integration_and_management_on_aws_spark.session import get_spark
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.replay import (
+        build_replay,
+        sweep_scratch,
+    )
+    from perfbench.proctree import tree, tree_cpu_s
 
-    spark = get_spark("bench-changed")
     qs = entrymod.queries()
     unknown = [n for n in names if n not in qs]
     if unknown:
-        sys.exit(f"--changed: unknown queries {unknown}")
+        sys.exit(f"unknown queries {unknown}")
+    order = names or list(dict.fromkeys([n for n in HEADLINE if n in qs] + list(qs)))
 
-    def run(name: str) -> float:
-        where = reduced.get(name, sf_dir)
-        t0 = time.perf_counter()
-        qs[name](spark, where).write.mode("overwrite").format("noop").save()
-        return round(time.perf_counter() - t0, 3)
-
-    # JVM/codegen warmup: flagship once, then each named query at sf0.001
-    # (same convention as the full bench's warmups 1 + 6)
-    qs["q1_pricing_summary"](spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    warm_sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")) or ".", "sf0.001")
-    if os.path.isdir(warm_sf):
-        for name in names:
-            try:
-                qs[name](spark, warm_sf).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-            except Exception:
-                pass
-    reps = {name: [run(name) for _ in range(3)] for name in names}
-    out = {
-        "metric": "changed_queries_spot",
-        "unit": "sec",
-        "sf": sf,
-        "sf_dir": sf_dir,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
-        "reps": reps,
-        "min": {n: min(r) for n, r in reps.items()},
-    }
-    spark.stop()
-    sys.stdout.flush()
-    os.write(1, (json.dumps(out) + "\n").encode())
-
-
-def main(check: bool = False) -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    reduced = {
-        name: os.path.join(os.path.dirname(sf_dir.rstrip("/")) or ".", leaf)
-        for name, leaf in REDUCED_SF.items()
-    }
-    # fall back to the bench SF when the sibling dir doesn't exist
-    reduced = {n: p for n, p in reduced.items() if os.path.isdir(p)}
-
-    import __spark_entry__ as entrymod
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.session import get_spark
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.replay import (
-        sweep_scratch,
-    )
-
-    # start-of-run scratch sweep (harness-side hygiene): clears the previous
-    # run's drained checkpoints / replay fixtures before any state is built
-    sweep_scratch()
-
+    sweep_scratch()  # drained checkpoints and replay fixtures of earlier runs
     spark = get_spark("bench")
-    qs = entrymod.queries()
 
     def drop_memory_sinks() -> None:
-        """Free each streaming query's memory-sink rows once timed.  The
-        memory sink is a TEST harness (production streams write parquet or
-        Kafka); left in place, ~20 drained streams' worth of collected rows
-        stay referenced by their temp views for the rest of the bench and
-        feed old-gen GC pressure late in the run."""
+        """The memory sink is a test harness; left in place, each drained
+        stream's collected rows stay referenced by its temp view for the
+        rest of the run and feed old-gen GC pressure late in it."""
         for t in spark.catalog.listTables():
             if t.name.startswith("mem_"):
                 spark.catalog.dropTempView(t.name)
 
-    def run(name: str) -> float:
-        where = reduced.get(name, sf_dir)
-        t0 = time.perf_counter()
+    def run(name: str, where: str) -> None:
         qs[name](spark, where).write.mode("overwrite").format("noop").save()
-        dt = time.perf_counter() - t0
-        drop_memory_sinks()
-        return dt
 
-    run("q1_pricing_summary")  # warmup: JVM + codegen + parquet footer cache
-    # warmup 2: Python-datasource worker pool (the saprfc DSv2 scan pays a
-    # one-time ~10s Python worker + Arrow setup cost on first use; steady
-    # state is ~0.6s).  A 10-row scan absorbs it without doing real work.
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.ingest import _saprfc_df
-
-    _saprfc_df(spark, mockrows="10").write.mode("overwrite").format("noop").save()
-    # ...and the filter-pushdown planning worker, a separate one-time spawn
-    # (without this, saprfc_pushdown alone pays ~6s of process setup that no
-    # other query repeats — measured 7.1s cold vs 0.9s warm in round 5)
-    from pyspark.sql import functions as _F
-
-    _saprfc_df(spark, mockrows="10").filter(_F.col("TABNAME") == "TAB1").write.mode(
-        "overwrite"
-    ).format("noop").save()
-    # warmup 3: materialize the streaming replay fixtures (chunked parquet
-    # copies of events) outside the timed region — test-fixture prep, not
-    # query execution; the per-(sf_dir, variant) cache makes later builds free.
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.replay import build_replay
-
+    # replay fixtures (chunked parquet copies of events) are test-fixture
+    # prep, not query execution; build_replay memoizes them per process
     for variant in ("ordered", "dups", "late", "bad"):
         build_replay(spark, sf_dir, variant)
-    # warmup 4: one tiny stateful-streaming drain absorbs the one-time
-    # microbatch-engine + state-store-provider + streaming-codegen setup
-    # (measured: first watermark query 5.9s cold vs 2.4s after this warmup
-    # — the same kind of one-time cost warmups 2-3 absorb for the Python
-    # data source).  3 rows in the REAL events schema so the window-agg
-    # codegen and state schema match the queries being timed.
-    import datetime
 
-    from pyspark.sql import Row
-
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.replay import (
-        EVENTS_SCHEMA,
-        run_to_table,
-    )
-
-    wdir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".scratch", "bench-warm-stream"
-    )
-    wrows = [
-        Row(event_id=i, ts=datetime.datetime(2020, 1, 1, i), user_id=i,
-            event_type="view", value=1.0, props="{}")
-        for i in range(3)
-    ]
-    spark.createDataFrame(wrows, EVENTS_SCHEMA).write.mode("overwrite").parquet(wdir)
-    warm = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(wdir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(_F.window("ts", "1 hour"))
-        .agg(_F.count(_F.lit(1)).alias("n_events"))
-        .select(_F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("ws"),
-                "n_events")
-    )
-    run_to_table(warm, "bench_warm_stream", "append", shuffle_partitions=4)
-    # warmup 5: the Spark 4 transformWithStateInPandas path pays a separate
-    # one-time setup on first use — RocksDB provider native-lib load +
-    # protobuf runtime provisioning + its own streaming codegen (warmup 4's
-    # HDFS-backed window agg absorbs none of it).  Drain at the BENCH SF:
-    # r8 warmed at sf0.001 and the timed sf0.1 number still re-paid ~5s of
-    # shape-dependent setup (r9 standalone corroboration: after an sf0.001
-    # warmup the first sf0.1 run reads 11.0s, the second 5.3s, the third
-    # 4.7s — the tiny-SF drain does not match the sf0.1 state-store/worker
-    # shape).  One full-SF drain makes the timed number steady-state, like
-    # every other one-time engine cost the earlier warmups absorb.
-    if "stream_stateful_v2" in qs:
-        qs["stream_stateful_v2"](spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        drop_memory_sinks()
-    # warmup 5b: the stateful-v2 drain churns the Python worker pool enough
-    # to evict the datasource workers warmup 2 primed (round-8 symptom: the
-    # headline saprfc_scan_typed re-paid the ~3.5s first-use worker + Arrow
-    # setup, reading 4.0s in-bench vs 0.5-0.6s standalone).  Re-prime both
-    # the scan worker and the pushdown-planning worker so the timed scan is
-    # steady-state regardless of what warmup 5 evicted.
-    _saprfc_df(spark, mockrows="10").write.mode("overwrite").format("noop").save()
-    _saprfc_df(spark, mockrows="10").filter(_F.col("TABNAME") == "TAB1").write.mode(
-        "overwrite"
-    ).format("noop").save()
-    # Environment calibration: a fixed CPU-bound Spark job whose cost is
-    # data-independent.  Cross-round headline comparisons divide by this to
-    # separate engine regressions from host-load drift (observed 1.4x
-    # headline swing between idle-box runs within one session).
-    def run_calib() -> float:
-        t0 = time.perf_counter()
-        spark.range(50_000_000).selectExpr("xxhash64(id) AS h").write.mode(
-            "overwrite"
-        ).format("noop").save()
-        return round(time.perf_counter() - t0, 3)
-
-    # Quiesce before the calibration sample: the warmups just enqueued
-    # thousands of cold-start compilations; ten idle seconds let the
-    # compiler threads drain the backlog so the sample prices the host,
-    # not the warmup's wake (calib_sec 0.953 was once measured right after
-    # the stateful warmup vs 0.32-0.47 at rest).
-    time.sleep(10)
-
-    # The start sample MUST be taken here — after warmups 1-5b, BEFORE the
-    # registry-wide warm pass below — to stay comparable with every frozen
-    # baseline calib (same convention).  A sample taken after the warm
-    # pass reads the maximally-warm-JVM number (~0.15 vs 0.40-0.62 at this
-    # point, measured) and would inflate every normalized value ~3x.
-    calib_start = run_calib()
-    calib_mc_start = run_calib_mc()
-
-    # warmup 6: one tiny-SF pass over EVERY registered query.  The module
-    # docstring's founding principle ("a warmup run absorbs JVM/codegen
-    # startup so the numbers reflect steady-state execution") applied to
-    # the whole registry, not just the flagship: each query's whole-stage-
-    # codegen classes get generated, compiled and JIT-hot on sf0.001 rows
-    # before anything is timed, so the timed sf-scale runs measure the
-    # operators, not compile-queue luck (the ROOT CAUSE note: without
-    # this, a moving mid-run window of queries one-offs 3-8x normalized —
-    # observed on the TPC-H block in one run, the text family in the next,
-    # the ann family in a third, each at-baseline standalone).  DISCLOSED
-    # protocol change (round 9): readings from this round on are warm
-    # steady-state; the frozen baseline rows predate it, so cross-round
-    # per-query ratios can read uniformly low until rows are naturally
-    # re-added — the headline gate's frozen value/value_norm is unaffected.
-    # Headline queries warm first (they are timed first); ~0.1-0.5s per
-    # query at sf0.001, ~2-3 min total for the 246-query registry.
-    warm_sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")) or ".", "sf0.001")
+    # Warm in reverse timing order so the first timed query is warmed last:
+    # saprfc_scan_typed's Python-datasource workers leave the reuse pool
+    # after ~1 min idle (measured 0.43-0.52 s right after a warm scan vs
+    # 0.89-1.37 s ten queries later).
+    warm_errors: dict[str, str] = {}
     if os.path.isdir(warm_sf):
-        for name in list(dict.fromkeys([*HEADLINE, *qs])):
-            if name in qs:
-                try:
-                    qs[name](spark, warm_sf).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
-                except Exception:
-                    pass  # a warmup must never take the bench down
-        drop_memory_sinks()
-        # release EVERY warm-SF entry the memoizing operators may have
-        # pinned (pair/token/edge/sketch frames keyed per sf_dir): the
-        # bounded FIFO caches would evict them anyway, but dropping them
-        # now keeps the timed region's storage memory identical to the
-        # pre-warmup protocol.  One central sweep (caches.clear_caches)
-        # instead of hand-listing dicts — the r9 advice found the old
-        # two-dict sweep missed graph/sketch memoizers.
-        from guidance_for_sap_data_integration_and_management_on_aws_spark.caches import (
-            clear_caches,
-        )
-
-        clear_caches(warm_sf)
-        # warmup 7 (r12 verdict item 2): VERIFY-KERNEL PRE-COMPILE.  The
-        # two fused dedup line items spiked ~5x in one committed run per
-        # round (r10-r12) while reading in-band standalone — profiled as
-        # tier-4 JIT queue luck on the hot verify kernel: warmup 6's
-        # sf0.001 pass generates and LOADS the verify classes but its ~60
-        # docs never reach C2's invocation threshold, so the first timed
-        # sf0.1 verify still runs tier-3 until the C2 compile lands
-        # (early = in-band, late = the spike).  Run the IDENTICAL verify
-        # expression trees (_exact_verify_stage / _lsh_verify_stage —
-        # factored out of the real builds so the generated codegen source,
-        # and therefore Spark's cached generated CLASS, is shared) over a
-        # ~300k-pair synthetic candidate frame built from the warm-SF
-        # token sets: enough iterations to push the hot methods through
-        # C2 before anything is timed, while doing none of the sf-scale
-        # work the line items measure.
-        try:
-            from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-                _exact_verify_stage,
-                _hashed_token_sets as _warm_toks,
-                _lsh_verify_stage,
-                _token_masks as _warm_masks,
-            )
-
-            _wt = _warm_toks(spark, warm_sf)
-            # r16: the verify kernels dispatch on the vocab-fits-one-word
-            # bitset masks — pass the warm-SF masks so the pre-compile
-            # generates the SAME class the timed sf-scale builds run
-            _wm = _warm_masks(spark, warm_sf)
-            _ids = _wt.select("doc_id")
-            _nd = _ids.count()
-            _rep = max(1, 300_000 // max(1, _nd * _nd))
-            _cand_w = (
-                _ids.select(_F.col("doc_id").alias("da"))
-                .crossJoin(_ids.select(_F.col("doc_id").alias("db")))
-                .crossJoin(spark.range(_rep))
-                .select("da", "db")
-                .localCheckpoint(eager=True)
-            )
-            _exact_verify_stage(_cand_w, _wt, _wm).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            _lsh_verify_stage(_cand_w, _wt, _wm).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            del _cand_w  # ~5 MB of checkpoint blocks; let them GC
-            clear_caches(warm_sf)  # the token build re-pinned a warm frame
-        except Exception:
-            pass  # a warmup must never take the bench down
-        # warmup 6b: the 246-query warm pass churns the Python worker pool
-        # exactly like warmup 5 did in round 8 (and evicts the datasource
-        # workers 5b re-primed — measured: saprfc_scan_typed 1.37s timed
-        # right after the warm pass vs 0.43-0.52s re-primed).  Re-prime the
-        # scan and pushdown-planning workers one last time, immediately
-        # before the timed region.
-        _saprfc_df(spark, mockrows="10").write.mode("overwrite").format(
-            "noop"
-        ).save()
-        _saprfc_df(spark, mockrows="10").filter(
-            _F.col("TABNAME") == "TAB1"
-        ).write.mode("overwrite").format("noop").save()
-
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    # per-stage breakdown of the two fused dedup line items (tokenize /
-    # candidates / verify) — DIAGNOSTIC ONLY, never counted toward any
-    # total: when one of them reads a C2-queue spike, this map says WHICH
-    # stage took the late compile instead of leaving readers to re-derive
-    # it each round (r12 verdict item 2)
-    stage_diag: dict[str, dict[str, float]] = {}
-    for name in HEADLINE:
-        if name in qs:
-            timings[name] = round(run(name), 3)
-
-    # PER-QUERY SUSPECT RE-RUN (round 16, r15 verdict item 1): the r15
-    # driver comparison read 18/19 headline rows regressed ~0.65x with ZERO
-    # relevant code change — per-row contention waves the run-level mc gate
-    # cannot localize.  Any headline row reading above SUSPECT_FACTOR x its
-    # frozen per-query normalized band (plus the sub-second absolute slack)
-    # is re-run up to twice after a short quiesce; the row reports the MIN
-    # of its readings (a contention wave can only INFLATE a reading — the
-    # min is the closest sample to the query's true cost; this is a
-    # measurement-bug fix per guide §1.4, disclosed in OPTIMIZATION_r16.md)
-    # and every raw reading is kept in the `suspect_reruns` audit map
-    # {first, reruns, band_sec}.  Frozen-baseline rows are never touched.
-    suspect_reruns: dict[str, dict] = {}
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "bench_baseline.json")
-        ) as fh:
-            _sus_base = json.load(fh).get("queries_norm", {})
-    except (OSError, ValueError):
-        _sus_base = {}
-    for name in [n for n in HEADLINE if n in timings]:
-        band_norm = _sus_base.get(name)
-        if not band_norm or not calib_start:
-            continue
-        band_sec = round(
-            SUSPECT_FACTOR * band_norm * calib_start + CHECK_SLACK_SEC, 3
-        )
-        if timings[name] <= band_sec:
-            continue
-        rec: dict = {"first": timings[name], "reruns": [], "band_sec": band_sec}
-        best = timings[name]
-        for _ in range(2):
-            time.sleep(2)  # quiesce: let a passing wave / late C2 land
-            t = round(run(name), 3)
-            rec["reruns"].append(t)
-            best = min(best, t)
-            if t <= band_sec:
-                break
-        timings[name] = best
-        suspect_reruns[name] = rec
-    total = round(sum(timings[n] for n in HEADLINE if n in timings), 3)
-
-    # Shared verified-pair frame: the quadratic exact pair frame dedup.py
-    # memoizes per (session, sf_dir) feeds dedup_jaccard_pairs,
-    # dedup_minhash_recall, dedup_connected_components and
-    # dedup_cluster_canonical.  Materialize it AFTER the headline block (no
-    # headline query consumes it, and pinning two multi-million-row
-    # persisted frames before the headline measurably pressures the whole
-    # block — observed +2x on an otherwise idle box) but BEFORE the full
-    # loop, charging the one-time build to explicit line items so the four
-    # consumers' times are order-independent (SHARED-FRAME ATTRIBUTION
-    # above).
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-        _jaccard_pairs_cached,
-    )
-
-    pair_consumers = ("dedup_jaccard_pairs", "dedup_minhash_recall",
-                      "dedup_minhash_lsh",
-                      "dedup_connected_components", "dedup_cluster_canonical")
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-        _hashed_token_sets,
-    )
-
-    for pdir in sorted({reduced.get(n, sf_dir) for n in pair_consumers if n in qs}):
-        leaf = os.path.basename(pdir.rstrip("/"))
-        # BOUNDED-JOBS SPLIT (r9 verdict item 5, the _lsh_pairs_pipeline
-        # recipe): submitted as ONE job, tokenize -> prefix -> expansion ->
-        # verify exposes the whole fused pipeline to the C2 compile-queue
-        # storm (in-bench 7.5-17.9s vs 6-9s steady standalone).  Time the
-        # three bounded stages separately with a short quiesce between so
-        # each stage's tier-4 compiles land before the next stage saturates
-        # the cores; the line item stays their SUM (the sleeps are not
-        # counted), so its meaning — total one-time build cost — and the
-        # baseline row's unit are unchanged.
-        try:
-            stages: dict[str, float] = {}
-            t0 = time.perf_counter()  # stage 1: tokenize + persist tokens
-            _hashed_token_sets(spark, pdir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            stages["tokenize"] = round(time.perf_counter() - t0, 3)
-            time.sleep(2)
-            t0 = time.perf_counter()  # stage 2: prefix + expansion ckpts
-            pairs = _jaccard_pairs_cached(spark, pdir)  # ckpts run eagerly
-            stages["candidates"] = round(time.perf_counter() - t0, 3)
-            time.sleep(2)
-            t0 = time.perf_counter()  # stage 3: the quadratic verify
-            pairs.write.mode("overwrite").format("noop").save()
-            stages["verify"] = round(time.perf_counter() - t0, 3)
-            t_build = sum(stages.values())
-            stage_diag[f"_shared_pair_frame_build[{leaf}]"] = stages
-        except Exception as e:  # same containment as the full loop: a
-            # failed frame build must cost its consumers, not the bench —
-            # record the consumers of this dir as errors too, otherwise
-            # each would silently re-attempt the quadratic build inside its
-            # own timing and the order-dependent attribution returns
-            errors[f"_shared_pair_frame_build[{leaf}]"] = (
-                f"{type(e).__name__}: {e}"[:200]
-            )
-            for name in pair_consumers:
-                if name in qs and reduced.get(name, sf_dir) == pdir:
-                    errors[name] = f"shared pair-frame build failed [{leaf}]"
-            continue
-        timings[f"_shared_pair_frame_build[{leaf}]"] = round(t_build, 3)
-    # The banded-LSH candidate checkpoint is memoized too (r10): without a
-    # shared build, whichever of dedup_minhash_lsh / dedup_minhash_recall
-    # is timed first absorbs the one-time checkpoint job — the same
-    # order-dependent attribution this block exists to prevent.  Build it
-    # as its own line item per reduced dir.
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-        _lsh_candidates_cached,
-    )
-
-    lsh_consumers = ("dedup_minhash_lsh", "dedup_minhash_recall")
-    for pdir in sorted({reduced.get(n, sf_dir) for n in lsh_consumers if n in qs}):
-        leaf = os.path.basename(pdir.rstrip("/"))
-        t0 = time.perf_counter()
-        try:
-            _lsh_candidates_cached(spark, pdir)  # eager banded checkpoint
-            timings[f"_shared_lsh_candidates[{leaf}]"] = round(
-                time.perf_counter() - t0, 3
-            )
-        except Exception as e:
-            errors[f"_shared_lsh_candidates[{leaf}]"] = (
-                f"{type(e).__name__}: {e}"[:200]
-            )
-
-    # ...then time the four consumers against the warm frames and RELEASE
-    # the frames before the rest of the suite: nothing else reads them, and
-    # leaving two multi-million-row persisted frames pinned measurably
-    # evicts other queries' caches for the remainder of the run (observed:
-    # the ann family 3-5x slower, dedup_minhash_lsh 2.7x, with the frames
-    # pinned vs r7's numbers).
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-        _PAIRS_CACHE,
-    )
-
-    for name in pair_consumers:
-        if name in qs and name not in timings and name not in errors:
+        for name in reversed(order):
             try:
-                timings[name] = round(run(name), 3)
-            except Exception as e:
-                errors[name] = f"{type(e).__name__}: {e}"[:200]
-    for frame in _PAIRS_CACHE.values():
-        frame.unpersist()
-    _PAIRS_CACHE.clear()
-    # ...and the reduced-dir candidate checkpoints built for
-    # _shared_lsh_candidates above: the two LSH consumers are timed, so
-    # the frames are dead weight from here — the same cache-inflation
-    # class this release block exists to prevent (round-10 advice; the
-    # full-SF entry is popped by the pipeline block below).  Dropping the
-    # dict reference lets the checkpoint blocks GC.
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-        _LSH_CAND_CACHE as _cand_cache,
-    )
+                run(name, warm_sf)
+            except Exception as e:  # the timed run reports it again
+                warm_errors[name] = f"{type(e).__name__}: {e}"[:200]
+            drop_memory_sinks()
+        clear_caches(warm_sf)
+    for name, err in warm_errors.items():
+        print(f"[bench] warm pass failed: {name}: {err}", file=sys.stderr)
 
-    for pdir in {reduced.get(n, sf_dir) for n in lsh_consumers if n in qs}:
-        for key in [k for k in _cand_cache if k[1] == pdir and pdir != sf_dir]:
-            _cand_cache.pop(key)
-
-    # Mid-run multi-core sample (round 16, r15 verdict item 1): the start/
-    # end samples bracket the run, so a contention wave that arrives AND
-    # leaves mid-run (the BENCH_r14 contiguous-spike-block shape) can dodge
-    # both.  One extra ~0.3 s probe between the headline/fused blocks and
-    # the full registry loop; feeds the same mc drift gate as start/end.
-    calib_mc_mid = run_calib_mc()
-
-    # warmup 8 (round 14, r13 verdict item 4 — the LAST cheap attempt at
-    # the _lsh_pairs_pipeline[sf0.1] C2 bimodality): re-run the REAL LSH
-    # pipeline at sf0.01 immediately before the sf0.1 fused build, so the
-    # factored verify kernel (_lsh_verify_stage) was JUST executed on real
-    # frame shapes — parquet checkpoint scan -> length prune -> intersect —
-    # rather than warmup 7's synthetic rows (which could not reproduce the
-    # 32-core contention window; r13 negative result).  Not timed; the
-    # quiesce lets its tier-4 compiles land before the sf0.1 verify
-    # saturates the cores.  If three protocol runs still read bimodal,
-    # the item is CLOSED-AS-PRICED via the c2_spike flag + stage_diag.
-    try:
-        from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-            _LSH_CAND_CACHE as _w8_cache,
-        )
-        from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-            minhash_lsh_pairs as _w8_pairs,
-        )
-
-        _w8_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
-        _w8_pairs(spark, _w8_dir).write.mode("overwrite").format("noop").save()
-        # release the warmup's candidate checkpoint (attribution hygiene:
-        # nothing timed may inherit state this warmup built)
-        for key in [k for k in _w8_cache if k[1] == _w8_dir]:
-            _w8_cache.pop(key)
-        time.sleep(2)
-    except Exception as e:
-        # a warmup must never take the bench down — but record the skip
-        # (r14 advice): the round protocol's LSH-bimodality conclusions
-        # depend on warmup 8 having actually run, and a silent pass made
-        # 'warmup ran' indistinguishable from 'warmup silently skipped'
-        print(f"[bench] warmup 8 (real-frame LSH pre-compile) SKIPPED: {e!r}", file=sys.stderr)
-
-    # The production banded-LSH pair pipeline, timed at the FULL bench SF:
-    # the registry's dedup_minhash_lsh row is since r9 the recall-mass
-    # certification (reduced to sf0.01 with the rest of the exact-twin
-    # oracle duty), so this line item keeps the 100 TB-relevant reading —
-    # tokenize -> 24 minhashes -> 12-band self-join -> exact verify — on
-    # the full corpus.
-    try:
-        from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-            _lsh_candidates_cached,
-            minhash_lsh_pairs,
-        )
-
-        # same bounded-jobs split as _shared_pair_frame_build above: stage
-        # the tokenize, the banded-candidate checkpoint, and the verify as
-        # separate jobs with a quiesce between (the fused submit read
-        # 12.1-15.7s in-bench vs 5.0s steady standalone — r9 validation
-        # note); the line item stays the SUM of the stages.
-        lsh_stages: dict[str, float] = {}
-        t0 = time.perf_counter()
-        _hashed_token_sets(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        lsh_stages["tokenize"] = round(time.perf_counter() - t0, 3)
-        time.sleep(2)
-        t0 = time.perf_counter()
-        _lsh_candidates_cached(spark, sf_dir)  # eager banded ckpt
-        lsh_stages["candidates"] = round(time.perf_counter() - t0, 3)
-        time.sleep(2)
-        t0 = time.perf_counter()
-        minhash_lsh_pairs(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        lsh_stages["verify"] = round(time.perf_counter() - t0, 3)
-        t_lsh = sum(lsh_stages.values())
-        stage_diag[
-            f"_lsh_pairs_pipeline[{os.path.basename(sf_dir.rstrip('/'))}]"
-        ] = lsh_stages
-        timings[
-            f"_lsh_pairs_pipeline[{os.path.basename(sf_dir.rstrip('/'))}]"
-        ] = round(t_lsh, 3)
-        # release the full-SF candidate checkpoint: no later query reads
-        # it (the registry's LSH rows are reduced-SF), and dropping the
-        # dict reference lets the ~8M-row checkpoint blocks GC instead of
-        # pinning block-manager memory for the rest of the run (the
-        # pair-frame release precedent)
-        from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-            _LSH_CAND_CACHE,
-        )
-
-        for key in [k for k in _LSH_CAND_CACHE if k[1] == sf_dir]:
-            _LSH_CAND_CACHE.pop(key)
-    except Exception as e:
-        errors[
-            f"_lsh_pairs_pipeline[{os.path.basename(sf_dir.rstrip('/'))}]"
-        ] = f"{type(e).__name__}: {e}"[:200]
-
-    # Same attribution split for graph.py's memoized co-purchase edge list
-    # (localCheckpoint, eager): every graph_* query reads it, so whichever
-    # ran first in registry order paid its one-time build (~3-5s at sf0.1 —
-    # r8's window re-sort moved graph_sssp_weighted to the front and its
-    # number silently tripled).  Build it here as its own line item; it is
-    # small enough to stay checkpointed for the run (the r7 status quo).
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.graph import (
-        copurchase_edges,
-    )
-
-    t0 = time.perf_counter()
-    try:
-        copurchase_edges(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        timings[
-            f"_shared_edge_frame_build[{os.path.basename(sf_dir.rstrip('/'))}]"
-        ] = round(time.perf_counter() - t0, 3)
-    except Exception as e:
-        errors[
-            f"_shared_edge_frame_build[{os.path.basename(sf_dir.rstrip('/'))}]"
-        ] = f"{type(e).__name__}: {e}"[:200]
-
-    for name in qs:
-        if name in timings or name in errors:
-            continue
+    wall: dict[str, float] = {}
+    cpu: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    pid = os.getpid()
+    for name in order:
+        procs0, c0, t0 = tree(pid), tree_cpu_s(pid), time.perf_counter()
         try:
-            timings[name] = round(run(name), 3)
-        except Exception as e:  # keep the bench line intact; surface the error
+            run(name, reduced.get(name, sf_dir))
+            wall[name] = round(time.perf_counter() - t0, 3)
+            c1 = tree_cpu_s(pid)
+            cpu[name] = round(c1 - c0 + exited_cpu_s(procs0, tree(pid)), 2)
+        except Exception as e:  # keep the result line intact; surface the error
             errors[name] = f"{type(e).__name__}: {e}"[:200]
+        drop_memory_sinks()  # outside the timer: listTables alone takes 0.1-0.3 s
 
-    # Re-measure calibration AFTER the suite as a DIAGNOSTIC only (surfaced
-    # as calib_sec_end): an end-of-run sample runs on a maximally-JIT-warm
-    # JVM and measures warmup, not host load (observed 0.50s start vs 0.20s
-    # end in one run), so folding it into the divisor would break the
-    # start-sample convention every prior round's normalized numbers use.
-    calib_end = run_calib()
-    calib_mc_end = run_calib_mc()
-    calib = calib_start
-
-    # Host-drift validity gate (see CALIB_DRIFT_FACTOR above): compare the
-    # start calibration against the FROZEN baseline's — a drifted host can
-    # only be detected against the fixed reference, not this run's own
-    # samples.  Since r15 the gate watches BOTH families: the 1-core
-    # sample (calib_sec, engine-normalization divisor, unchanged
-    # convention) and the every-core sample (calib_mc_sec), which catches
-    # the r14 class of multi-core contention the 1-core probe reads as
-    # normal.  The mc gate checks start AND end: contention that arrives
-    # mid-run (the BENCH_r14 contiguous-spike-block shape) is visible only
-    # in the end sample — and unlike the 1-core end sample (which reads a
-    # maximally-JIT-warm JVM), the mc probe is pure-Python, so its end
-    # sample prices the HOST identically to its start sample.
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "bench_baseline.json")) as fh:
-            _base = json.load(fh)
-        base_calib = _base.get("calib_sec")
-        base_calib_mc = _base.get("calib_mc_sec")
-    except (OSError, ValueError):
-        base_calib = base_calib_mc = None
-    host_drift_1c = bool(base_calib) and calib_start > CALIB_DRIFT_FACTOR * base_calib
-    # judge over whichever mc samples succeeded (a failed probe returns
-    # 0.0): one good contended sample must flag even if the other probe
-    # errored — gating on the start sample alone would let an end-sample
-    # contention reading slip a degraded run into the certified artifact
-    _mc_samples = [s for s in (calib_mc_start, calib_mc_mid, calib_mc_end) if s]
-    host_drift_mc = bool(base_calib_mc) and bool(_mc_samples) and (
-        max(_mc_samples) > CALIB_MC_DRIFT_FACTOR * base_calib_mc
-    )
-    host_drift = host_drift_1c or host_drift_mc
-
-    # Calibration-normalized twins (VERDICT r03 item 8): divide by this run's
-    # calib_sec so cross-round diffs separate host-load drift (1.3-6x swings
-    # observed between runs on this box) from real engine regressions.  Unit:
-    # multiples of the fixed 50M-row xxhash64 calibration job.
-    norm = {name: round(t / calib, 3) for name, t in timings.items()} if calib else {}
+    headline = [n for n in HEADLINE if n in wall]
     out = {
         "metric": "headline_suite_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "all_queries_total": round(sum(timings.values()), 3),
-        "n_queries": len(timings),
-        "calib_sec": calib,
-        "calib_sec_start": calib_start,
-        "calib_sec_end": calib_end,
-        "calib_mc_sec": calib_mc_start,
-        "calib_mc_sec_start": calib_mc_start,
-        "calib_mc_sec_mid": calib_mc_mid,
-        "calib_mc_sec_end": calib_mc_end,
-        "host_drift_mc": host_drift_mc,
-        "queries_norm": norm,
-        "value_norm": round(total / calib, 3) if calib else None,
-        "all_queries_total_norm": round(sum(timings.values()) / calib, 3) if calib else None,
-        "norm_unit": "x_calib",
-        "host_drift": host_drift,
-        "calib_baseline": base_calib,
-        "reduced_sf": {k: v for k, v in reduced.items() if k in timings},
-        "stage_diag": stage_diag,
-    }
-    if suspect_reruns:
-        out["suspect_reruns"] = suspect_reruns
-    # C2-SPIKE FLAG (r12 verdict item 2): the two fused dedup line items
-    # carry a documented in-bench bimodality — tier-4 JIT queue luck that
-    # standalone runs never reproduce (module docstring, ROOT CAUSE note).
-    # Warmup 7 pre-compiles their verify kernels, but a late C2 landing on
-    # some OTHER stage's hot method can still spike one of them in a
-    # committed artifact.  Flag any fused row reading >2x its frozen
-    # normalized baseline so readers see "the documented bimodality, see
-    # stage_diag for which stage" instead of re-deriving it every round.
-    try:
-        with open(os.path.join(here, "bench_baseline.json")) as fh:
-            _base_norm = json.load(fh).get("queries_norm", {})
-    except (OSError, ValueError):
-        _base_norm = {}
-    c2 = {
-        k: timings[k]
-        for k in stage_diag
-        if k in norm and _base_norm.get(k) and norm[k] > 2 * _base_norm[k]
-    }
-    if c2:
-        out["c2_spike"] = c2
-    if errors:
-        out["errors"] = errors
-    if host_drift:
-        # point readers of a drifted artifact at the committed in-band run
-        out["certified_results"] = "bench_out_certified.json"
-    payload = json.dumps(out)
-    # Persist the FULL result beside the script FIRST: r02's driver capture
-    # truncated the stdout tail and lost the headline block — the file can't
-    # be lost that way and is what --check (and the judge) reads.
-    with open(os.path.join(here, "bench_out.json"), "w") as fh:
-        fh.write(payload + "\n")
-    # ...and refresh the certified snapshot ONLY from an in-band run: the
-    # round-end BENCH_rN artifact is whatever run the driver last took, so
-    # the certified file is the cross-round perf signal's drift-proof twin.
-    if not host_drift:
-        with open(os.path.join(here, "bench_out_certified.json"), "w") as fh:
-            fh.write(payload + "\n")
-    # The driver's BENCH_rN artifact keeps only the LAST 2000 chars of
-    # stdout and parses the result line out of that window — the full
-    # 158-query line is ~6 KB, so no round's artifact ever got a non-null
-    # "parsed" (r5 verdict, What's wrong #2).  Emit a COMPACT line (contract
-    # fields + headline-only per-query maps, full maps in bench_out.json)
-    # sized to fit the window, as the very last stdout bytes: Spark is
-    # stopped first so no JVM shutdown noise can land after it, and the
-    # single atomic os.write can't interleave.
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
+        "value": round(sum(wall[n] for n in headline), 3),
         "unit": "sec",
         "sf": sf,
-        "queries": {n: timings[n] for n in HEADLINE if n in timings},
-        "queries_norm": {n: norm[n] for n in HEADLINE if n in norm},
-        "calib_sec": calib,
-        "calib_mc_sec": calib_mc_start,
-        "calib_mc_sec_end": calib_mc_end,
-        "value_norm": out["value_norm"],
-        "all_queries_total": out["all_queries_total"],
-        "all_queries_total_norm": out["all_queries_total_norm"],
-        "norm_unit": "x_calib",
-        "host_drift": host_drift,
-        "host_drift_mc": host_drift_mc,
-        "n_queries": len(timings),
-        "n_errors": len(errors),
-        "full_results": "bench_out.json",
+        "queries": wall,
+        "queries_cpu": cpu,
+        "value_cpu": round(sum(cpu[n] for n in headline), 2),
+        "all_queries_total": round(sum(wall.values()), 3),
+        "all_queries_cpu_total": round(sum(cpu.values()), 2),
+        "n_queries": len(wall),
+        "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+        "reduced_sf": {k: v for k, v in reduced.items() if k in wall},
+        "errors": errors,
+        "warm_errors": warm_errors,
     }
-    if c2:
-        # surface the fused-item bimodality flag in the driver-captured
-        # tail too (BENCH_rN keeps only the compact line; without this the
-        # flag exists only in bench_out.json and readers of the committed
-        # artifact re-derive the explanation — the exact failure mode the
-        # flag was added to end)
-        compact["c2_spike"] = c2
-    if host_drift:
-        compact["certified_results"] = "bench_out_certified.json"
-    if suspect_reruns:
-        # surface which rows were re-run in the driver-captured tail (full
-        # {first, reruns, band_sec} detail stays in bench_out.json)
-        compact["suspect_reruns"] = sorted(suspect_reruns)
-    compact_payload = json.dumps(compact)
-    if len(compact_payload) > 1900:  # still too big -> drop the norm map
-        compact.pop("queries_norm")
-        compact_payload = json.dumps(compact)
+    with open(os.path.join(HERE, "bench_out.json"), "w") as fh:
+        fh.write(json.dumps(out) + "\n")
+
+    shown = [n for n in (names or HEADLINE) if n in wall]
+    compact = {k: out[k] for k in (
+        "metric", "value", "unit", "sf", "value_cpu", "all_queries_total",
+        "all_queries_cpu_total", "n_queries",
+    )}
+    compact.update(n_errors=len(errors), full_results="bench_out.json")
+    while True:
+        compact["queries"] = {n: wall[n] for n in shown}
+        compact["queries_cpu"] = {n: cpu[n] for n in shown}
+        payload = json.dumps(compact)
+        if len(payload) <= COMPACT_MAX_CHARS:
+            break
+        shown.pop()
+    # stop Spark first so no JVM shutdown noise lands after the result line
     spark.stop()
     sys.stdout.flush()
     sys.stderr.flush()
-    os.write(1, (payload + "\n").encode())  # full line for complete captures
-    os.write(1, (compact_payload + "\n").encode())  # last line: fits the 2000-char tail
-
-    if check:
-        with open(os.path.join(here, "bench_baseline.json")) as fh:
-            base = json.load(fh)["queries"]
-        bad = [
-            f"{name}: {timings[name]:.2f}s vs baseline {base[name]:.2f}s "
-            f"(>{CHECK_FACTOR}x + {CHECK_SLACK_SEC}s)"
-            for name in HEADLINE
-            if name in base
-            and name in timings
-            and timings[name] > CHECK_FACTOR * base[name] + CHECK_SLACK_SEC
-        ]
-        # check chatter goes to stderr so the bare JSON stays stdout's last line
-        if bad:
-            print("PERF REGRESSION vs bench_baseline.json:\n" + "\n".join(bad),
-                  file=sys.stderr)
-            sys.exit(1)
-        print(f"perf check OK: {len([n for n in HEADLINE if n in timings])} "
-              f"headline queries within {CHECK_FACTOR}x of baseline",
-              file=sys.stderr)
+    os.write(1, (payload + "\n").encode())
+    if gate:
+        check(wall)
 
 
 if __name__ == "__main__":
-    if "--changed" in sys.argv:
-        i = sys.argv.index("--changed")
-        names = [n for arg in sys.argv[i + 1 :] for n in arg.split(",") if n]
-        if not names:
-            sys.exit("--changed requires explicit query names")
-        bench_changed(names)
-    elif "--baseline-add-new" in sys.argv:
+    args = sys.argv[1:]
+    if "--baseline-add-new" in args:
         baseline_add_new()
-    elif "--baseline-reprice" in sys.argv:
-        i = sys.argv.index("--baseline-reprice")
-        names = sys.argv[i + 1 :]
+    elif "--baseline-reprice" in args:
+        names = args[args.index("--baseline-reprice") + 1 :]
         if not names:
             sys.exit("--baseline-reprice requires explicit query names")
         baseline_reprice(names)
+    elif [a for a in args if a.startswith("--") and a != "--check"]:
+        sys.exit(f"unknown options {args}; see the module docstring")
     else:
-        main(check="--check" in sys.argv)
+        main([a for a in args if a != "--check"], gate="--check" in args)

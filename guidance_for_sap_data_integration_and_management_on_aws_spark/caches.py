@@ -1,16 +1,15 @@
-"""Central registry of the per-(session, sf_dir) memoizer dicts.
+"""The one memoizer for per-(session, sf_dir) derived frames, and the
+registry of its cache dicts.
 
 Several operator families memoize an expensive derived frame per corpus
-snapshot (dedup's token/pair tables, graph's edge frame, the sketch fact
-tables).  Each cache is bounded — persisted frames through
-``dedup._cached_persisted`` (FIFO + unpersist), checkpointed frames through
-``bounded_put`` below (FIFO; dropping the reference lets the blocks GC) —
-but harness code — the bench's post-warmup cleanup in particular — needs to
-release EVERY entry pinned for a given sf_dir, not just the dicts it
-happens to know about (round-9 advice: the hard-coded two-dict sweep
-silently skipped graph._EDGE_CACHE and the sketch caches).  Modules
-register their dicts at definition time; ``clear_caches(sf_dir)`` is the
-one sweep point.
+snapshot (dedup's token/pair/mask/candidate/label frames, graph's edge
+frame, the sketch fact tables).  ``memoize`` keys each entry by
+``(applicationId, sf_dir)`` — a new session never sees a dead frame — and
+bounds every dict at ``CACHE_MAX_ENTRIES`` with FIFO eviction; an evicted
+frame is unpersisted, and dropping the reference lets a localCheckpoint's
+blocks be GC-reclaimed.  Modules register their dicts at definition time so
+that ``clear_caches(sf_dir)`` releases every entry pinned for an sf_dir —
+the bench uses it after its warm pass — without knowing the dicts.
 
 Registration is a side effect of importing the owning module, so callers
 that want a FULL sweep should import the operator modules first (the bench
@@ -21,6 +20,8 @@ module by the time a sweep runs).
 from __future__ import annotations
 
 from typing import Callable
+
+from pyspark.sql import SparkSession
 
 # (cache dict, key -> sf_dir extractor)
 _REGISTRY: list[tuple[dict, Callable]] = []
@@ -36,22 +37,24 @@ def register_cache(cache: dict, sf_of_key: Callable = lambda k: k[1]) -> dict:
     return cache
 
 
-CACHE_MAX_ENTRIES = 4  # one live SF dir + headroom, matching dedup._CACHE_MAX
+CACHE_MAX_ENTRIES = 4  # one live SF dir + headroom
 
 
-def bounded_put(cache: dict, key, val):
-    """FIFO-bounded insert for the CHECKPOINT-backed memoizers (CC labels,
-    edge frames, LSH candidates): insertion order = oldest first; evicted
-    frames are unpersist'ed where supported, and dropping the dict
-    reference lets a localCheckpoint's blocks be GC-reclaimed.  One
-    implementation so the bound can't drift per cache (the persisted-frame
-    twin with an eager unpersist contract is dedup._cached_persisted)."""
+def memoize(cache: dict, spark: SparkSession, sf_dir: str, build: Callable):
+    """``cache[(applicationId, sf_dir)]``, calling ``build()`` on a miss.
+    Any value is memoized, None included.  Insertion order is age, so the
+    oldest entry is evicted first; its ``unpersist`` may fail on a frame of
+    an already-stopped session, which is harmless."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key in cache:
+        return cache[key]
+    val = build()
     while len(cache) >= CACHE_MAX_ENTRIES:
         old = cache.pop(next(iter(cache)))
         try:
             old.unpersist()
         except Exception:
-            pass  # non-persisted frame, or an already-stopped SparkSession
+            pass  # None, a non-persisted frame, or a stopped SparkSession
     cache[key] = val
     return val
 

@@ -95,21 +95,13 @@ def parallelize_small_scan(df: DataFrame, key: str) -> DataFrame:
 MATERIALIZE_MIN_BYTES = 64 * 1024 * 1024
 
 
-def source_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of a fixture table (single file or directory tree)."""
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
+def source_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Bytes of a fixture table (single file or directory tree), sized by
+    the Hadoop FileSystem that serves ``sf_dir`` — a local path, a
+    ``file://`` URI or an object store alike.  A missing table raises."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{name}.parquet")
+    fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return fs.getContentSummary(path).getLength()
 
 
 def materialize_if_wide(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
@@ -118,7 +110,7 @@ def materialize_if_wide(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     the barrier — see MATERIALIZE_MIN_BYTES.  Semantics-preserving at any
     threshold (a checkpoint changes where rows come from, never what they
     are); the threshold only moves the recompute/barrier trade."""
-    if source_bytes(sf_dir, name=table) >= MATERIALIZE_MIN_BYTES:
+    if source_bytes(df.sparkSession, sf_dir, table) >= MATERIALIZE_MIN_BYTES:
         return df.localCheckpoint(eager=True)
     return df
 

@@ -22,7 +22,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caches import bounded_put, register_cache
+from ..caches import memoize, register_cache
 from ..catalog import load, parallelize_small_scan
 from ..functions.vector import cosine, sign_bucket, sql_cosine, sql_sign_bucket
 from ..registry import QuerySpec, spec
@@ -194,43 +194,12 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_pairs_cached(spark, sf_dir)
 
 
-_CACHE_MAX = 4  # one live SF dir + headroom; oldest unpersisted on evict
-
-
-def _cached_persisted(
-    cache: dict[tuple[str, str], DataFrame],
-    spark: SparkSession,
-    sf_dir: str,
-    build,
-) -> DataFrame:
-    """Shared bounded per-(session, sf_dir) memoizer for PERSISTED derived
-    frames (the token-set and verified-pair tables; graph.py's _EDGE_CACHE
-    is the checkpointed sibling).  FIFO eviction — insertion order = oldest
-    first; popitem() would evict the NEWEST and pin stale entries forever —
-    and eviction unpersists so repeated sessions don't pin executor
-    storage.  One implementation so the keying/bound/eviction invariants
-    can't drift between the caches."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    out = build().persist()
-    while len(cache) >= _CACHE_MAX:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # frame may belong to an already-stopped SparkSession
-    cache[key] = out
-    return out
-
-
 _PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 
 
 def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached_persisted(
-        _PAIRS_CACHE, spark, sf_dir, lambda: _jaccard_pairs_plan(spark, sf_dir)
+    return memoize(
+        _PAIRS_CACHE, spark, sf_dir, lambda: _jaccard_pairs_plan(spark, sf_dir).persist()
     )
 
 
@@ -294,11 +263,11 @@ def _token_mask_frame(toks: DataFrame) -> DataFrame | None:
 def _token_masks(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """Memoized per (session, sf_dir) like the token frame it derives from
     (None — vocab too wide — is memoized too, so the probe count runs once)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MASK_CACHE:
-        return _MASK_CACHE[key]
-    return bounded_put(
-        _MASK_CACHE, key, _token_mask_frame(_hashed_token_sets(spark, sf_dir))
+    return memoize(
+        _MASK_CACHE,
+        spark,
+        sf_dir,
+        lambda: _token_mask_frame(_hashed_token_sets(spark, sf_dir)),
     )
 
 
@@ -309,14 +278,6 @@ def _exact_verify_stage(
     (da, db) candidate frame: broadcast-join the token sets (or, when the
     vocabulary fits one machine word, their 64-bit masks — see
     BITSET_VOCAB_MAX) onto both sides; |A∪B| by inclusion-exclusion.
-
-    Factored out of :func:`_jaccard_pairs_plan` (round 13) so the bench's
-    verify-kernel pre-compile (bench.py warmup 7) runs the IDENTICAL
-    expression tree over a small synthetic candidate frame — identical
-    generated whole-stage-codegen source means Spark's codegen cache
-    reuses the class, so the warmup's iterations push the hot method
-    through C2 before the timed sf-scale build runs (the fused-item spike
-    root cause, VERDICT r12 item 2).
 
     EXPLICIT broadcast of the token-set table into the verify joins: the
     candidate side is the big one (quadratic pair mass in this dense
@@ -410,9 +371,9 @@ def _hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(
                 F.array_distinct(F.split(F.col("text"), " ")), lambda w: F.xxhash64(w)
             ).alias("toks"),
-        )
+        ).persist()
 
-    return _cached_persisted(_TOKEN_CACHE, spark, sf_dir, build)
+    return memoize(_TOKEN_CACHE, spark, sf_dir, build)
 
 
 JACCARD_T = 0.6
@@ -644,17 +605,14 @@ _LSH_CAND_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 
 
 def _lsh_candidates_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LSH_CAND_CACHE.get(key)
-    if hit is None:
-        hit = bounded_put(
-            _LSH_CAND_CACHE,
-            key,
-            _lsh_band_candidates(_hashed_token_sets(spark, sf_dir)).localCheckpoint(
-                eager=True
-            ),
-        )
-    return hit
+    return memoize(
+        _LSH_CAND_CACHE,
+        spark,
+        sf_dir,
+        lambda: _lsh_band_candidates(_hashed_token_sets(spark, sf_dir)).localCheckpoint(
+            eager=True
+        ),
+    )
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -699,11 +657,7 @@ def _lsh_verify_stage(
     cand: DataFrame, hashed: DataFrame, masks: DataFrame | None = None
 ) -> DataFrame:
     """The banded-LSH VERIFY stage over a materialized (da, db) candidate
-    frame — factored out (round 13) for the same reason as
-    :func:`_exact_verify_stage`: the bench's verify-kernel pre-compile
-    runs this exact expression tree on a synthetic frame so its generated
-    class is C2-hot before the timed ``_lsh_pairs_pipeline`` build.
-    ``masks`` switches the per-pair intersection to the exact 64-bit
+    frame.  ``masks`` switches the per-pair intersection to the exact 64-bit
     bitset kernel (see BITSET_VOCAB_MAX); the array kernel remains the
     wide-vocabulary path."""
     if masks is not None:
@@ -814,11 +768,7 @@ _CC_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 
 
 def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CC_CACHE.get(key)
-    if hit is None:
-        hit = bounded_put(_CC_CACHE, key, _cc_labels_fixpoint(spark, sf_dir))
-    return hit
+    return memoize(_CC_CACHE, spark, sf_dir, lambda: _cc_labels_fixpoint(spark, sf_dir))
 
 
 def _cc_labels_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1228,9 +1178,9 @@ def _hashed_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_distinct(_word_shingles(words, CONTAIN_NGRAM)),
                 lambda g: F.xxhash64(g),
             ).alias("toks"),
-        )
+        ).persist()
 
-    return _cached_persisted(_SHINGLE_CACHE, spark, sf_dir, build)
+    return memoize(_SHINGLE_CACHE, spark, sf_dir, build)
 
 
 @spec(

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import bounded_put, register_cache
+from ..caches import memoize, register_cache
 from ..catalog import load
 from ..registry import QuerySpec, spec
 
@@ -83,15 +83,12 @@ _EDGE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EDGE_CACHE.get(key)
-    if hit is None:
-        hit = bounded_put(
-            _EDGE_CACHE,
-            key,
-            _copurchase_edges_plan(spark, sf_dir).localCheckpoint(eager=True),
-        )
-    return hit
+    return memoize(
+        _EDGE_CACHE,
+        spark,
+        sf_dir,
+        lambda: _copurchase_edges_plan(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def _copurchase_edges_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

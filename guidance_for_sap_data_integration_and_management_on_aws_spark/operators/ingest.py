@@ -637,17 +637,11 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lake import read_back, write_dual_sink
     from ..streaming.replay import scratch_dir
 
-    from ..sources.rfc import ParsedRfc
-
     base = scratch_dir(f"sink-{uuid.uuid4().hex[:8]}")
     parsed = parse_rfc_frame(_wa_frame(spark, sf_dir), FIELDS)
-    # both formats sink the SAME parse: persist the two channels so the
-    # wa-construction + split + cast pipeline runs once, not once per write
-    parsed = ParsedRfc(
-        valid=parsed.valid.persist(),
-        errors=parsed.errors.persist(),
-        fields=parsed.fields,
-    )
+    # both formats sink the SAME parse: persist it across the two writes so
+    # the wa-construction + split pipeline runs once, not once per write
+    parsed.tagged.persist()
     try:
         rows = []
         for fmt in ("parquet", "json"):
@@ -662,8 +656,7 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             rows.append((fmt, "error", err_n))
     finally:
-        parsed.valid.unpersist()
-        parsed.errors.unpersist()
+        parsed.tagged.unpersist()
     return spark.createDataFrame(rows, "fmt STRING, channel STRING, n_rows BIGINT")
 
 

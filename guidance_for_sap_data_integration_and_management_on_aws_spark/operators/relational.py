@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caches import register_cache
+from ..caches import memoize, register_cache
 from ..catalog import load, parallelize_small_scan
 from ..functions.exprs import (
     SQL_CHARGE,
@@ -478,7 +478,7 @@ def agg_hll_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 KLL_TOL = 0.05  # k=200 -> ~1.65% rank error; value tol 5% on a dense range
 
 # bounded per-(session, sf_dir) caches for the rollup-merge sketch fact
-# tables (dedup._cached_persisted is the one shared memoizer implementation)
+# tables
 _HLL_CELL_CACHE: dict = register_cache({})
 _KLL_CELL_CACHE: dict = register_cache({})
 
@@ -641,8 +641,6 @@ def agg_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a naive per-level re-aggregation would pay four.",
 )
 def agg_hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _cached_persisted
-
     ev = load(spark, sf_dir, "events").select(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day"), "user_id"
     )
@@ -651,13 +649,13 @@ def agg_hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session — parity + dtype + plan tests, the bench — must reuse ONE
     # frame, not pin a fresh one each call) so all rollup levels merge
     # THIS frame instead of re-reading events
-    base = _cached_persisted(
+    base = memoize(
         _HLL_CELL_CACHE,
         spark,
         sf_dir,
-        lambda: ev.groupBy("event_type", "day").agg(
-            F.hll_sketch_agg("user_id").alias("sk")
-        ),
+        lambda: ev.groupBy("event_type", "day")
+        .agg(F.hll_sketch_agg("user_id").alias("sk"))
+        .persist(),
     )
     nul = F.lit(None).cast("string")
     # each estimate row carries its rollup level as the grouping_id it will
@@ -737,21 +735,17 @@ def agg_hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scans.",
 )
 def agg_kll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _cached_persisted
-
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_extendedprice"
     )
     price = F.col("l_extendedprice").cast("double")
-    base = _cached_persisted(
+    base = memoize(
         _KLL_CELL_CACHE,
         spark,
         sf_dir,
-        lambda: li.groupBy("l_returnflag", "l_linestatus").agg(
-            F.expr(
-                "kll_sketch_agg_double(CAST(l_extendedprice AS DOUBLE))"
-            ).alias("sk")
-        ),
+        lambda: li.groupBy("l_returnflag", "l_linestatus")
+        .agg(F.expr("kll_sketch_agg_double(CAST(l_extendedprice AS DOUBLE))").alias("sk"))
+        .persist(),
     )
     merge_fold = _kll_merge_fold().alias("sk")
     nul = F.lit(None).cast("string")

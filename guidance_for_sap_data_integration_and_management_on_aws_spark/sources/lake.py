@@ -6,7 +6,7 @@ The reference writes one S3 object per page under
 layout is produced by distributed writers: each task writes its partition's
 file (the page -> object mapping the reference maintains by hand falls out of
 partition-per-page planning), and the error channel is a second filtered
-write over the same cached parse.
+write over the same persisted parse.
 """
 
 from __future__ import annotations
@@ -126,27 +126,30 @@ def write_dual_sink(
     data_path = layout_path(base, RESULT_PREFIX, fmt, table, ts)
     err_path = layout_path(base, ERROR_PREFIX, fmt, table, ts)
 
-    # Asymmetric counting, sized for scale: the valid side (arbitrarily large)
-    # is counted via observe() as a side effect of its own write — no cache,
-    # no second scan; only the error side (small by construction, ~% of rows)
-    # is cached for its count-then-conditionally-write sequence.  The counts
-    # are the distributed twin of the reference's per-page counters
-    # (pyrfc_read_table.py:119-122,151-153).
+    # The valid side is counted via observe() as a side effect of its own
+    # write; the error side is counted, then written only if non-empty.  The
+    # counts are the distributed twin of the reference's per-page counters
+    # (pyrfc_read_table.py:119-122,151-153).  Both channels read one
+    # persisted parse, so each source page is fetched once; a parse the
+    # caller already persisted stays persisted.
     obs = Observation()
     valid = parsed.valid.observe(obs, F.count(F.lit(1)).alias("n_valid"))
-    errors = parsed.errors.cache()
+    owned = not parsed.tagged.is_cached
+    if owned:
+        parsed.tagged.persist()
     try:
         valid.write.mode("append").format(fmt).save(data_path)
         if reference_naming:
             _apply_reference_naming(data_path, table, fmt)
-        n_err = errors.count()
+        n_err = parsed.errors.count()
         if n_err:  # reference only writes an error object when err rows exist (:219-221)
-            errors.write.mode("append").format(fmt).save(err_path)
+            parsed.errors.write.mode("append").format(fmt).save(err_path)
             if reference_naming:
                 _apply_reference_naming(err_path, table, fmt)
         return IngestReport(data_path, err_path, int(obs.get["n_valid"]), n_err)
     finally:
-        errors.unpersist()
+        if owned:
+            parsed.tagged.unpersist()
 
 
 def read_back(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:

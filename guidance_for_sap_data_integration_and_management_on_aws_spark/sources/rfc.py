@@ -445,11 +445,13 @@ def read_rfc_table(
 
 @dataclass
 class ParsedRfc:
-    """One cached parse, two channels (the reference's data/data_err split,
-    pyrfc_read_table.py:143-149)."""
+    """One parse, two channels (the reference's data/data_err split,
+    pyrfc_read_table.py:143-149).  Both channels filter ``tagged``, so a
+    consumer of both persists it to read the source once."""
 
     valid: DataFrame
     errors: DataFrame  # original WA line + observed arity
+    tagged: DataFrame  # the split WA lines with their arity
     fields: list[RfcField] = field(default_factory=list)
 
 
@@ -484,7 +486,7 @@ def parse_rfc_frame(
     errors = tagged.filter(F.col("__arity") != n).select(
         F.col(wa_col).alias("wa"), F.col("__arity").alias("arity")
     )
-    return ParsedRfc(valid=valid, errors=errors, fields=list(fields))
+    return ParsedRfc(valid=valid, errors=errors, tagged=tagged, fields=list(fields))
 
 
 def ingest_counts(parsed: ParsedRfc) -> dict[str, int]:

@@ -17,9 +17,8 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session", autouse=True)
 def _sweep_scratch():
-    # start-of-session scratch sweep (harness-side hygiene, mirrors
-    # bench.main): clears prior runs' drained streaming checkpoints and
-    # replay fixtures before this session builds its own
+    # clears prior runs' drained streaming checkpoints and replay fixtures
+    # before this session builds its own (bench.py sweeps at its start too)
     from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.replay import (
         sweep_scratch,
     )

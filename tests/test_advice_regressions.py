@@ -173,6 +173,9 @@ def test_ngram_oracles_unbounded_past_256_tokens(spark, tmp_path):
 
 
 def test_token_cache_evicts_oldest_and_survives_dead_frames(spark, sf_dir):
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.caches import (
+        CACHE_MAX_ENTRIES,
+    )
     from guidance_for_sap_data_integration_and_management_on_aws_spark.operators import dedup
 
     class _Fake:
@@ -188,7 +191,7 @@ def test_token_cache_evicts_oldest_and_survives_dead_frames(spark, sf_dir):
     saved = dict(dedup._TOKEN_CACHE)
     dedup._TOKEN_CACHE.clear()
     try:
-        fakes = [_Fake(raises=(i == 0)) for i in range(dedup._CACHE_MAX)]
+        fakes = [_Fake(raises=(i == 0)) for i in range(CACHE_MAX_ENTRIES)]
         for i, f in enumerate(fakes):
             dedup._TOKEN_CACHE[("app", f"dir{i}")] = f
         got = dedup._hashed_token_sets(spark, sf_dir)

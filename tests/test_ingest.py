@@ -120,6 +120,31 @@ def test_reference_object_naming(spark, parsed, fmt):
         assert err_names and read_back(spark, report.error_path, fmt).count() == report.err_count
 
 
+def test_dual_sink_fetches_each_page_once(spark, tmp_path):
+    """read_rfc_table -> parse_rfc_frame -> write_dual_sink fetches every
+    page exactly once, although both channels and the error count read it.
+    Fetches run in Python workers, so they are logged to a file."""
+    log = str(tmp_path / "fetches.log")
+
+    class CountingTransport(MockRfcTransport):
+        def call(self, query_table, delimiter, rowskips, rowcount, *args, **kwargs):
+            if not kwargs.get("no_data"):
+                with open(log, "a") as fh:
+                    fh.write(f"{rowskips}\n")
+            return super().call(query_table, delimiter, rowskips, rowcount, *args, **kwargs)
+
+    raw, fields = read_rfc_table(
+        spark, lambda: CountingTransport(N_ROWS), "DD03L", page_size=PAGE
+    )
+    report = write_dual_sink(
+        parse_rfc_frame(raw, fields), str(tmp_path / "lake"), "DD03L", run_ts="r1"
+    )
+    assert report.total_count == N_ROWS and report.err_count > 0
+    with open(log) as fh:
+        fetched = sorted(int(line) for line in fh)
+    assert fetched == [0, PAGE, 2 * PAGE]
+
+
 def test_reference_naming_append_continues_counter(spark, parsed):
     """Appending a second run into the same renamed run path must CONTINUE
     the cumulative counter (reference semantics) instead of restarting at 0

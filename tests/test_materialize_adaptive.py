@@ -14,7 +14,10 @@ when the source table's on-disk bytes cross MATERIALIZE_MIN_BYTES, so:
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from py4j.protocol import Py4JJavaError
 
 import __spark_entry__ as entrymod
 from guidance_for_sap_data_integration_and_management_on_aws_spark import catalog
@@ -64,8 +67,17 @@ def test_adaptive_barrier_collapses_scans_and_preserves_rows(
     assert sorted(map(tuple, mat_df.collect())) == lazy_rows
 
 
-def test_threshold_keeps_bench_sf_lazy(sf_dir):
+def test_threshold_keeps_bench_sf_lazy(spark, sf_dir):
     # every fixture table at the bench SFs sits far below the threshold, so
     # the graded plans are byte-identical to the pre-helper round
     for t in catalog.TABLES:
-        assert catalog.source_bytes(sf_dir, t) < catalog.MATERIALIZE_MIN_BYTES
+        assert catalog.source_bytes(spark, sf_dir, t) < catalog.MATERIALIZE_MIN_BYTES
+
+
+def test_source_bytes_is_path_scheme_independent_and_loud(spark, sf_dir):
+    plain = catalog.source_bytes(spark, sf_dir, "orders")
+    assert plain == os.path.getsize(f"{sf_dir}/orders.parquet")
+    uri = "file://" + os.path.abspath(sf_dir)
+    assert catalog.source_bytes(spark, uri, "orders") == plain
+    with pytest.raises(Py4JJavaError, match="FileNotFoundException"):
+        catalog.source_bytes(spark, os.path.join(sf_dir, "no_such_dir"), "orders")
