@@ -13,13 +13,16 @@ every memoized build (token sets, pair frames, edge lists, ...) is charged to
 the first timed query that consumes it.  The timing order is HEADLINE, then
 registry order, so that attribution is deterministic.  Each query is timed
 once, forced end to end by a noop write (unlike ``count()``, it lets Spark
-prune no column), recording wall seconds and the CPU seconds of the whole
-process tree: this process, the Spark JVM and its Python workers.
+prune no column), recording wall seconds, the CPU seconds of the whole
+process tree (this process, the Spark JVM and its Python workers) and the
+number of classes Janino compiled for it (``queries_codegen``; a query whose
+generated code is still in Spark's codegen cache compiles none).
 
 The full result goes to bench_out.json beside this script.  The last stdout
 line is one JSON object of at most 2,000 chars holding ``metric``/``value``
 (headline wall total)/``unit``/``sf`` and the per-query ``queries`` (wall)
-and ``queries_cpu`` maps of the headline (or named) queries.
+and ``queries_cpu`` maps of the headline (or named) queries;
+``queries_codegen`` is in bench_out.json only.
 """
 
 from __future__ import annotations
@@ -246,6 +249,12 @@ def main(names: list[str], gate: bool = False) -> None:
             if t.name.startswith("mem_"):
                 spark.catalog.dropTempView(t.name)
 
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        """Classes Janino has compiled in this JVM so far."""
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     def run(name: str, where: str) -> None:
         qs[name](spark, where).write.mode("overwrite").format("noop").save()
 
@@ -272,15 +281,18 @@ def main(names: list[str], gate: bool = False) -> None:
 
     wall: dict[str, float] = {}
     cpu: dict[str, float] = {}
+    compiled: dict[str, int] = {}
     errors: dict[str, str] = {}
     pid = os.getpid()
     for name in order:
+        k0 = compiles()
         procs0, c0, t0 = tree(pid), tree_cpu_s(pid), time.perf_counter()
         try:
             run(name, reduced.get(name, sf_dir))
             wall[name] = round(time.perf_counter() - t0, 3)
             c1 = tree_cpu_s(pid)
             cpu[name] = round(c1 - c0 + exited_cpu_s(procs0, tree(pid)), 2)
+            compiled[name] = compiles() - k0
         except Exception as e:  # keep the result line intact; surface the error
             errors[name] = f"{type(e).__name__}: {e}"[:200]
         drop_memory_sinks()  # outside the timer: listTables alone takes 0.1-0.3 s
@@ -293,6 +305,7 @@ def main(names: list[str], gate: bool = False) -> None:
         "sf": sf,
         "queries": wall,
         "queries_cpu": cpu,
+        "queries_codegen": compiled,
         "value_cpu": round(sum(cpu[n] for n in headline), 2),
         "all_queries_total": round(sum(wall.values()), 3),
         "all_queries_cpu_total": round(sum(cpu.values()), 2),

@@ -5,11 +5,22 @@
 bucketed parquet or Iceberg tables; the access path is identical
 (``spark.read.parquet`` with Catalyst pushdown + pruning), so nothing in the
 operators cares which.
+
+Parquet schema inference launches a Spark job per read.  ``load`` runs it
+once per table and lake snapshot: the inferred schema is memoized per
+``(applicationId, sf_dir)`` through ``caches.memoize`` (so
+``caches.clear_caches(sf_dir)`` drops it), and a repeat load reads with
+that schema and launches no job.  A memoized schema is used only while the
+length and modification time of the table path's Hadoop ``FileStatus``
+match the ones it was inferred from; a table rewritten at the same path is
+inferred again.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .caches import memoize, register_cache
 
 TABLES = (
     "region",
@@ -29,13 +40,34 @@ TABLES = (
 # constant-size), so a broadcast hint is safe at 100 TB too.
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 
+# (applicationId, sf_dir) -> {table: ((length, mtime), schema)}
+_SCHEMAS: dict = register_cache({})
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixture table ``name`` of the lake at ``sf_dir``.  The first
+    load of a table in a session infers its parquet schema (one Spark
+    job); later loads reuse it and launch none, until the table path's
+    length or modification time changes (see the module docstring)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read(spark, sf_dir, name)
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
+    p, fs = _hadoop_path(spark, path)
+    st = fs.getFileStatus(p)  # of the directory itself for a directory table
+    stamp = (st.getLen(), st.getModificationTime())
+    schemas = memoize(_SCHEMAS, spark, sf_dir, dict)
+    hit = schemas.get(name)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[name] = (stamp, df.schema)
+    return df
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,7 +82,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read(spark, sf_dir, "events")
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -99,9 +131,14 @@ def source_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Bytes of a fixture table (single file or directory tree), sized by
     the Hadoop FileSystem that serves ``sf_dir`` — a local path, a
     ``file://`` URI or an object store alike.  A missing table raises."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{name}.parquet")
-    fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    path, fs = _hadoop_path(spark, f"{sf_dir}/{name}.parquet")
     return fs.getContentSummary(path).getLength()
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop ``Path``, the session's ``FileSystem`` that serves it)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
 
 
 def materialize_if_wide(df: DataFrame, sf_dir: str, table: str) -> DataFrame:

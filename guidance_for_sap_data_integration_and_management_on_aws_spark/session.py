@@ -20,6 +20,16 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "tune"]
 
+
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 16g (see
+    below), capped at 3/4 of physical RAM so the heap the JVM may grow to
+    is always backed by memory, with room left for Metaspace, the code
+    cache, off-heap buffers and the Python workers."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb * 3 // 4)}m"
+
+
 _LOCAL_DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -51,9 +61,19 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # queries (graph_pagerank 9.7s in-run vs 1.7s standalone, identical
     # plans) appear at 16g AND 28g with full-run totals flapping +-10%
     # between identical-code runs — box-level noise, not heap sizing, so
-    # the measured 16g stands.  A cluster deployment sets executor memory
+    # the measured 16g stands, capped below physical RAM on smaller hosts
+    # (default_driver_memory).  A cluster deployment sets executor memory
     # instead.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+    # Generated-code cache (Spark's default: 100 classes).  One sf0.001 pass
+    # over the 256 registered queries compiles 2,732 classes, and the 12
+    # lake_sql benchmark queries alone need more than 100, so at the default
+    # a long-lived session recompiles query shapes it has already run.  Two
+    # passes over the registry at sf0.001 in one session (local[4]): at 100
+    # entries the passes compiled 3,571 and 3,381 classes, at 4096 they
+    # compiled 2,732 and 73, with Metaspace at 273 MB vs 249 MB after the
+    # second pass.  4096 holds the measured working set with headroom.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     # JIT code-cache headroom for the local harness.  A full bench pass
     # compiles hundreds of queries' whole-stage-codegen classes in one JVM;
     # at the JDK-17 default (240 MB, UseCodeCacheFlushing=true) a filling

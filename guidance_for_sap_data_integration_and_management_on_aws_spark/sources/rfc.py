@@ -417,7 +417,10 @@ def read_rfc_table(
     n = total_rows if total_rows is not None else probe.row_count(query_table)
     n_pages = max(1, math.ceil(n / page_size))
 
-    pages = spark.range(n_pages).repartition(n_pages)
+    # one range slice per page: partition i holds exactly page i, with no
+    # shuffle (a round-robin repartition would leave some tasks several
+    # pages to fetch one after another, and others none)
+    pages = spark.range(0, n_pages, 1, n_pages)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         transport = transport_factory()

@@ -1,5 +1,6 @@
 """bench.py's stdout contract: the last line is one JSON object of at most
-2,000 chars with the result keys and a per-query CPU·s map."""
+2,000 chars with the result keys and a per-query CPU·s map; bench_out.json
+also holds the classes compiled per query."""
 
 from __future__ import annotations
 
@@ -33,3 +34,8 @@ def test_named_queries_print_contract_line(tmp_path, sf_dir):
     assert all(out["queries_cpu"][n] > 0 for n in out["queries"])
     full = json.loads((tmp_path / "bench_out.json").read_text())
     assert full["queries_cpu"] == out["queries_cpu"]
+    # classes compiled per timed query: in bench_out.json, not on stdout
+    assert "queries_codegen" not in out
+    codegen = full["queries_codegen"]
+    assert set(codegen) == {"q1_pricing_summary", "join_inner"}
+    assert all(type(codegen[n]) is int and codegen[n] >= 0 for n in codegen)

@@ -5,12 +5,17 @@ validity split, DDIC casts, dual sinks, count invariant."""
 from __future__ import annotations
 
 import datetime
+import math
 import tempfile
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from guidance_for_sap_data_integration_and_management_on_aws_spark.plans.inspect import (
+    executed_plan,
+    n_exchanges,
+)
 from guidance_for_sap_data_integration_and_management_on_aws_spark.sources.lake import (
     read_back,
     write_dual_sink,
@@ -143,6 +148,27 @@ def test_dual_sink_fetches_each_page_once(spark, tmp_path):
     with open(log) as fh:
         fetched = sorted(int(line) for line in fh)
     assert fetched == [0, PAGE, 2 * PAGE]
+
+
+def test_each_page_is_its_own_partition(spark, tmp_path):
+    """Partition-per-page planning: every partition of the raw frame holds
+    exactly one page, with no shuffle in its plan, so with reference_naming
+    each page becomes one data object."""
+    page_size = 230  # 11 pages
+    n_pages = math.ceil(N_ROWS / page_size)
+    raw, fields = read_rfc_table(
+        spark, lambda: MockRfcTransport(N_ROWS), "DD03L", page_size=page_size
+    )
+    assert n_exchanges(executed_plan(raw)) == 0
+    placed = raw.select(F.spark_partition_id().alias("pid"), "page").distinct().collect()
+    assert len(placed) == n_pages
+    assert len({r["pid"] for r in placed}) == len({r["page"] for r in placed}) == n_pages
+    report = write_dual_sink(
+        parse_rfc_frame(raw, fields), str(tmp_path), "DD03L", run_ts="r1",
+        reference_naming=True,
+    )
+    objects = [f for f in Path(report.data_path).iterdir() if f.name.startswith("DD03L")]
+    assert len(objects) == n_pages
 
 
 def test_reference_naming_append_continues_counter(spark, parsed):
