@@ -3,10 +3,12 @@
 The reference writes one S3 object per page under
 ``glue/result/<fmt>/<table>/<run-ts>/`` and malformed rows under a parallel
 ``result-err`` prefix (pyrfc_read_table.py:45-50,180-221).  Here the same
-layout is produced by distributed writers: each task writes its partition's
-file (the page -> object mapping the reference maintains by hand falls out of
-partition-per-page planning), and the error channel is a second filtered
-write over the same persisted parse.
+layout is produced by distributed writers: each task writes one object per
+channel for its partition, which ``read_rfc_table`` plans as one contiguous,
+ordered run of pages, so an object holds whole pages in page order (the
+packing Spark's file scan applies to small files, instead of one small object
+per page).  The error channel is a second filtered write over the same
+persisted parse.
 """
 
 from __future__ import annotations
@@ -54,8 +56,11 @@ def _apply_reference_naming(path: str, table: str, fmt: str) -> list[str]:
 
     Distributed writers name by task id; the reference's names encode the
     serial running total, so this is a driver-side METADATA pass after the
-    write: part files in name order (= page/partition order) get the running
-    row total from parquet footers / JSON-line counts — no data moves.
+    write: part files in name order (= partition order, and each partition
+    is a contiguous run of pages) get the running row total from parquet
+    footers / JSON-line counts — no data moves.  One object stands for one
+    task's run of pages, so the names are the reference's cumulative counts
+    at the slice boundaries rather than at every page.
     On an append into a run path that was renamed before, the total CONTINUES
     from the largest existing cumulative count (the reference's counter also
     runs on across pages), so a re-run can never clobber earlier objects.

@@ -9,11 +9,15 @@ prefix to S3 (:180-221).
 
 This module re-expresses each stage Spark-first:
 
-* **partition-per-page scan** — pages are planned up front and fetched by
+* **packed paged scan** — pages are planned up front and fetched by
   executors in parallel (``read_rfc_table``), the distributed analogue of the
-  reference's ``ROWSKIPS/ROWCOUNT`` loop (S1/S2).  On a 1000-executor cluster
-  a 10^9-row SAP table becomes 10^4 concurrent page reads instead of 10^4
-  serial round-trips.
+  reference's ``ROWSKIPS/ROWCOUNT`` loop (S1/S2).  Each task fetches one
+  contiguous, ordered run of pages through one transport, with one task per
+  core slot (Spark's ``defaultParallelism``), the way Spark's file scan
+  packs small files: a Python worker task has a fixed cost far above one
+  page's work (README, "Scale design").  On a 1000-executor cluster a
+  10^9-row SAP table still becomes 1000 concurrent page streams instead of
+  10^4 serial round-trips.
 * **schema-from-catalog** — FIELDS metadata -> typed parse plan (S3).
 * **parse / validate / cast** — one ``select`` of built-in expressions
   (split, F.get, trim, try_cast): P1-P5, all whole-stage-codegen.
@@ -32,12 +36,17 @@ import math
 import re
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ddic import ddic_cast
+
+if TYPE_CHECKING:
+    # imported inside ``fetch``: a stream-source runner or planner worker
+    # that imports this module through saprfc_dsv2 never needs pandas
+    import pandas as pd
 
 DEFAULT_DELIMITER = "`"  # reference default, pyrfc_read_table.py:32
 DEFAULT_PAGE_SIZE = 100_000  # reference rowCount, pyrfc_read_table.py:33
@@ -386,7 +395,7 @@ class MockRfcTransport(RfcTransport):
 
 
 # ---------------------------------------------------------------------------
-# Distributed scan: partition per page (S1/S2)
+# Distributed scan: contiguous page runs, one per core slot (S1/S2)
 # ---------------------------------------------------------------------------
 
 
@@ -401,10 +410,13 @@ def read_rfc_table(
 ) -> tuple[DataFrame, list[RfcField]]:
     """Parallel paged scan of an RFC table.
 
-    Plans one input partition per ``ROWSKIPS/ROWCOUNT`` page and fetches
-    pages inside executors via ``mapInPandas`` (Arrow-batched), so the wire
-    protocol parallelism scales with the cluster instead of the reference's
-    one-page-in-flight loop.  Returns (raw WA DataFrame, FIELDS metadata).
+    Plans the ``ROWSKIPS/ROWCOUNT`` pages up front and splits them into
+    ``min(n_pages, defaultParallelism)`` contiguous runs.  Each task opens
+    one transport (one RFC logon) and fetches its run in page order inside
+    ``mapInPandas`` (Arrow-batched), one page in memory at a time, so the
+    wire parallelism scales with the cluster instead of the reference's
+    one-page-in-flight loop, without paying a Python worker task per page.
+    Returns (raw WA DataFrame with its ``page`` id, FIELDS metadata).
     """
     probe = transport_factory()
     # NO_DATA: metadata-only probe — works even on tables whose full row
@@ -417,12 +429,13 @@ def read_rfc_table(
     n = total_rows if total_rows is not None else probe.row_count(query_table)
     n_pages = max(1, math.ceil(n / page_size))
 
-    # one range slice per page: partition i holds exactly page i, with no
-    # shuffle (a round-robin repartition would leave some tasks several
-    # pages to fetch one after another, and others none)
-    pages = spark.range(0, n_pages, 1, n_pages)
+    # range slices are contiguous and differ by at most one page, with no
+    # shuffle (a round-robin repartition would scatter each task's pages)
+    pages = spark.range(0, n_pages, 1, min(n_pages, spark.sparkContext.defaultParallelism))
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         transport = transport_factory()
         for b in batches:
             for page in b["id"]:

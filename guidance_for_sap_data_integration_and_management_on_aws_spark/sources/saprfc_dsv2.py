@@ -7,6 +7,12 @@ as a first-class Spark source:
   ``ROWSKIPS/ROWCOUNT`` page, fetched concurrently by executors; the
   distributed inversion of the reference's serial loop
   (`/root/reference/pyrfc_read_table/pyrfc_read_table.py:66-83`).
+  Unlike ``rfc.read_rfc_table``, which packs a contiguous run of pages
+  into each of ``defaultParallelism`` tasks, these planners stay one
+  partition per page: ``partitions()`` runs in a Python planner worker
+  that sees only the reader options, not the cluster's parallelism, so it
+  has no slice count to pack to.  Each page therefore pays one Python
+  worker task's fixed cost (README, "Scale design").
 * **schema-from-catalog** (S3) — FIELDS metadata → typed ``StructType``
   per the DDIC mapping of SURVEY §1.2 (`pyrfc_read_table.py:124-133`).
 * **filter pushdown** (P7) — ``pushFilters`` renders supported predicates
@@ -59,6 +65,7 @@ never a pickled tuple per row.
 from __future__ import annotations
 
 import datetime
+import logging
 import math
 import re
 import sys
@@ -67,6 +74,7 @@ from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal, InvalidOperation, localcontext
 from typing import Any
 
+from pyspark.errors import PySparkException
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -1464,12 +1472,24 @@ class SapRfcDataSource(DataSource):
         return SapRfcStreamReader(self.options, [by_name[n] for n in names])
 
 
+# the error conditions of a session that refuses ``conf.set`` on a key
+_CONF_REFUSALS = frozenset({"CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"})
+
+
 def register(spark) -> None:
     spark.dataSource.register(SapRfcDataSource)
+    key = "spark.sql.python.filterPushdown.enabled"
     try:
         # without this Spark never calls pushFilters (results are identical,
         # just with a residual FilterExec); set defensively for host sessions
         # that lack our session.py defaults
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # static conf in this session: the residual filter is still correct
+        spark.conf.set(key, "true")
+    except PySparkException as e:
+        if e.getCondition() not in _CONF_REFUSALS:
+            raise
+        # the residual filter is still correct, only the pushdown is lost
+        logging.getLogger(__name__).warning(
+            "saprfc: session refused %s=true (%s); filters are not pushed to the source",
+            key,
+            e.getCondition(),
+        )

@@ -41,7 +41,7 @@ def parsed(spark):
 def test_pagination_covers_all_rows(parsed):
     raw, _, _ = parsed
     assert raw.count() == N_ROWS
-    # partition-per-page: page ids 0..2, and the final page is short
+    # page ids 0..2, and the final page is short
     pages = {r["page"]: r["n"] for r in raw.groupBy("page").agg(F.count("*").alias("n")).collect()}
     assert pages == {0: PAGE, 1: PAGE, 2: N_ROWS - 2 * PAGE}
 
@@ -150,25 +150,109 @@ def test_dual_sink_fetches_each_page_once(spark, tmp_path):
     assert fetched == [0, PAGE, 2 * PAGE]
 
 
-def test_each_page_is_its_own_partition(spark, tmp_path):
-    """Partition-per-page planning: every partition of the raw frame holds
-    exactly one page, with no shuffle in its plan, so with reference_naming
-    each page becomes one data object."""
+def test_pages_pack_into_contiguous_runs(spark, tmp_path):
+    """Each fetch task reads one contiguous, ascending run of pages through
+    one transport, with min(n_pages, defaultParallelism) tasks and no
+    shuffle; with reference_naming each task's run becomes one object per
+    channel, named by the cumulative row count at the run's end."""
+    import re
+    import uuid
+
+    log = str(tmp_path / "fetches.log")
+
+    class LoggingTransport(MockRfcTransport):
+        def __init__(self, n_rows):
+            super().__init__(n_rows)
+            self.tag = uuid.uuid4().hex
+
+        def call(self, query_table, delimiter, rowskips, rowcount, *args, **kwargs):
+            if not kwargs.get("no_data"):
+                from pyspark import TaskContext
+
+                with open(log, "a") as fh:
+                    fh.write(f"{TaskContext.get().partitionId()} {self.tag} {rowskips}\n")
+            return super().call(query_table, delimiter, rowskips, rowcount, *args, **kwargs)
+
     page_size = 230  # 11 pages
     n_pages = math.ceil(N_ROWS / page_size)
+    slots = min(n_pages, spark.sparkContext.defaultParallelism)
+    assert slots < n_pages  # premise: local[4] packs 11 pages into 4 tasks
     raw, fields = read_rfc_table(
-        spark, lambda: MockRfcTransport(N_ROWS), "DD03L", page_size=page_size
+        spark, lambda: LoggingTransport(N_ROWS), "DD03L", page_size=page_size
     )
     assert n_exchanges(executed_plan(raw)) == 0
-    placed = raw.select(F.spark_partition_id().alias("pid"), "page").distinct().collect()
-    assert len(placed) == n_pages
-    assert len({r["pid"] for r in placed}) == len({r["page"] for r in placed}) == n_pages
+    assert raw.rdd.getNumPartitions() == slots
     report = write_dual_sink(
         parse_rfc_frame(raw, fields), str(tmp_path), "DD03L", run_ts="r1",
         reference_naming=True,
     )
-    objects = [f for f in Path(report.data_path).iterdir() if f.name.startswith("DD03L")]
-    assert len(objects) == n_pages
+    assert report.total_count == N_ROWS
+
+    runs: dict[int, list[int]] = {}
+    transports: dict[int, set[str]] = {}
+    with open(log) as fh:
+        for line in fh:
+            pid, tag, skips = line.split()
+            runs.setdefault(int(pid), []).append(int(skips) // page_size)
+            transports.setdefault(int(pid), set()).add(tag)
+    assert sorted(runs) == list(range(slots))
+    # each page once, ascending and contiguous within a task, tasks in page order
+    assert [p for pid in sorted(runs) for p in runs[pid]] == list(range(n_pages))
+    sizes = [len(r) for r in runs.values()]
+    assert max(sizes) - min(sizes) <= 1
+    assert all(len(t) == 1 for t in transports.values())  # one transport per task
+
+    valid = err = 0
+    want_valid, want_err = [], []
+    for pid in sorted(runs):
+        rows = range(runs[pid][0] * page_size, min((runs[pid][-1] + 1) * page_size, N_ROWS))
+        bad = sum(1 for i in rows if i % 37 == 0)  # malformed mock rows
+        valid, err = valid + len(rows) - bad, err + bad
+        want_valid.append(valid)
+        want_err.append(err)
+    for path, want in ((report.data_path, want_valid), (report.error_path, want_err)):
+        counts = sorted(
+            int(m.group(1))
+            for f in Path(path).iterdir()
+            if (m := re.fullmatch(r"DD03L(\d+)\.parquet", f.name))
+        )
+        assert counts == want
+
+
+def test_extract_task_and_object_counts(spark, tmp_path):
+    """Counter guard for the packed extract: read -> parse -> dual sink over
+    11 pages at local[4] runs a fixed number of Spark tasks and writes one
+    object per fetch task per channel.  Per-page fetch tasks (11 per scan)
+    would raise both counts."""
+    import uuid
+
+    sc = spark.sparkContext
+    page_size = 230  # 11 pages -> 4 fetch tasks at local[4]
+    n_pages = math.ceil(N_ROWS / page_size)
+    slots = min(n_pages, sc.defaultParallelism)
+    assert slots < n_pages
+    gid = f"extract-counters-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        raw, fields = read_rfc_table(
+            spark, lambda: MockRfcTransport(N_ROWS), "DD03L", page_size=page_size
+        )
+        report = write_dual_sink(parse_rfc_frame(raw, fields), str(tmp_path), "DD03L", run_ts="r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    tasks = 0
+    for job in tracker.getJobIdsForGroup(gid):
+        for sid in tracker.getJobInfo(job).stageIds:
+            stage = tracker.getStageInfo(sid)
+            tasks += stage.numCompletedTasks if stage else 0
+    # valid write + error count (+ 1 task, its final aggregate) + error write:
+    # 13 at local[4]
+    assert tasks == 3 * slots + 1
+    for path in (report.data_path, report.error_path):
+        assert len(list(Path(path).glob("part-*.parquet"))) == slots
 
 
 def test_reference_naming_append_continues_counter(spark, parsed):

@@ -1253,3 +1253,54 @@ def test_line_wrap_query_plan_lock_and_wire_width(spark):
     lines = r.wire_options()
     assert len(lines) >= 3 and all(len(l) <= 72 for l in lines)
     assert any("OR" in l for l in lines)  # the group rides the same WHERE
+
+
+def test_saprfc_import_leaves_pandas_unloaded():
+    """Stream-source runners and planner workers import the source module in
+    a fresh Python process; pandas must not ride along with it (it costs
+    about 0.12 CPU·s per process and only the batch fetch needs it)."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import guidance_for_sap_data_integration_and_management_on_aws_spark.sources.saprfc_dsv2\n"
+        "print('pandas' in sys.modules)\n"
+    )
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, check=True)
+    assert proc.stdout.strip() == "False"
+
+
+def test_register_tolerates_only_conf_refusal(spark, caplog):
+    """register() logs and goes on when the session refuses to modify the
+    pushdown conf, and lets any other error propagate."""
+    import logging
+
+    import pytest
+    from pyspark.errors import PySparkException
+
+    # a real refusal, as a session raises it for a static conf
+    with pytest.raises(PySparkException) as info:
+        spark.conf.set("spark.sql.warehouse.dir", "/nowhere")
+    refusal = info.value
+    assert refusal.getCondition() == "CANNOT_MODIFY_STATIC_CONFIG"
+
+    class _Conf:
+        def __init__(self, err):
+            self.err = err
+
+        def set(self, key, value):
+            raise self.err
+
+    class _Session:
+        def __init__(self, err):
+            self.dataSource = spark.dataSource
+            self.conf = _Conf(err)
+
+    with caplog.at_level(logging.WARNING):
+        register(_Session(refusal))
+    assert "spark.sql.python.filterPushdown.enabled" in caplog.text
+    assert "CANNOT_MODIFY_STATIC_CONFIG" in caplog.text
+
+    with pytest.raises(RuntimeError, match="gateway down"):
+        register(_Session(RuntimeError("gateway down")))
