@@ -6,7 +6,8 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash -> CORRECTNESS_r{N}.json).
 
 Queries live in the package modules (one oracle-checked entry per operator
-row of SURVEY.md §2); this file just aggregates their registries.
+row of SURVEY.md §2); this file just aggregates their registries, in
+module order.
 """
 
 from __future__ import annotations
@@ -16,158 +17,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from guidance_for_sap_data_integration_and_management_on_aws_spark.registry import QuerySpec
-
-
-# Driver-budget-aware ordering.  The driver verifies roughly the FIRST 50
-# registry entries per round, so this list is re-sorted every round by
-# criticality of the check.
-#
-# ROTATION INVARIANT (keep this when re-sorting in future rounds): after
-# blocks 1-2 below, fill the window with the queries whose latest driver
-# green is OLDEST, oldest first, so that no query's green ever ages past
-# ~5 rounds without being re-earned (246 queries / ~50 slots).
-#
-#   1. NEVER HASH-CHECKED queries (brand-new this round, or rows-only
-#      entries converted to carry an oracle);
-#   2. queries whose BUILDER OR ORACLE CHANGED since their last green;
-#   3. STALENESS rotation per the invariant: oldest greens first, up to
-#      the window line;
-#   4. ROTATION BALLAST: the next-oldest greens queue just past the line
-#      for the following round, then module order (freshest last).
-_PRIORITY = [
-    # ------------------------------------------------------------------
-    # ROUND-16 WINDOW LEDGER (~50 driver slots; see rotation invariant
-    # above).  No new queries this round (optimization round).  Block 2
-    # holds every builder whose PROGRAM changed since its last driver
-    # green: the five r15 optimization rewrites the r15 advisor flagged
-    # as owed (q2 pre-agg filter, pmi materialization, peak-concurrency
-    # sweep, equidepth count, bloom literal), plus this round's r16
-    # changes — the bitset verify family (pairs/LSH/incremental + the
-    # pair-frame consumers CC/canonical + containment's prefix kernel
-    # arg), the SF-adaptive materialization sites, and the
-    # recursive-chain view binding.  Budget:
-    #   22 changed-since-green                      -> slots  1-22
-    #   28 oldest r10 greens (of the 35 remaining
-    #      after 4 moved into block 2; the last 7
-    #      queue first for r17)                     -> slots 23-50
-    # ------------------------------------------------------------------
-    # --- 2. builder changed since last green: r15 optimization rewrites
-    # --- (owed per r15 ADVICE) + r16 optimization rewrites --------------
-    "q2_min_cost_supplier",
-    "text_bigram_pmi",
-    "events_peak_concurrency",
-    "agg_equidepth_histogram",
-    "join_bloom_prefilter",
-    "dedup_jaccard_pairs",
-    "dedup_minhash_lsh",
-    "dedup_minhash_recall",
-    "dedup_incremental_jaccard",
-    "dedup_connected_components",
-    "dedup_cluster_canonical",
-    "dedup_containment_pairs",
-    "text_tfidf_topk",
-    "text_unigram_logprob",
-    "text_bm25_topk",
-    "pipeline_decontaminate",
-    "events_funnel",
-    "ingest_merge_upsert",
-    "ingest_merge_into_route",
-    "ann_matryoshka_recall",
-    "lake_snapshot_diff",
-    "sql_recursive_chain",
-    # --- 3. staleness rotation: oldest r10 greens, alphabetical (28 of
-    # --- the 35 left after the block-2 moves) ---------------------------
-    "ann_label_match",
-    "ann_lsh_topk",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_exact_bucketed",
-    "dedup_exact_survivors",
-    "dedup_incremental",
-    "dedup_simhash_buckets",
-    "embedding_quantize_int8",
-    "fn_bitwise",
-    "fn_conditional",
-    "fn_json",
-    "fn_map",
-    "fn_math",
-    "fn_regex",
-    "ingest_scd2_history",
-    "ingest_scd2_snapshot",
-    "join_asof",
-    "join_cross_theta",
-    "join_interval_overlap",
-    "join_range_bands",
-    "mm_payload_hash",
-    "pipeline_curation",
-    "pipeline_domain_mix",
-    "pipeline_length_buckets",
-    "pivot_linestatus",
-    "q12_late_shipments",
-    "stream_windowed_topk",
-    # --- 4. rotation ballast: the remaining 7 r10 greens queue FIRST for
-    # --- round 17 (the window line falls above here), then the r15
-    # --- window (saprfc family + r9 drain, all re-greened r15) ----------
-    "subquery_exists",
-    "subquery_scalar",
-    "text_entropy",
-    "text_simhash",
-    "unpivot_measures",
-    "window_lag_lead",
-    "window_rank",
-    "saprfc_pushdown_line_wrap",
-    "saprfc_pushdown",
-    "saprfc_pushdown_in_like",
-    "saprfc_pushdown_suffix_contains",
-    "saprfc_pushdown_disjunction",
-    "saprfc_stream_pushdown",
-    "saprfc_scan_typed",
-    "saprfc_projection",
-    "saprfc_limit_pushdown",
-    "saprfc_stream_scan",
-    "saprfc_stream_incremental",
-    "saprfc_stream_projection",
-    "distinct_flags",
-    "except_custkeys",
-    "filter_where",
-    "fn_array",
-    "fn_datetime",
-    "fn_string",
-    "intersect_custkeys",
-    "join_anti",
-    "join_broadcast",
-    "join_full_outer",
-    "join_inner",
-    "join_left_outer",
-    "join_salted_skew",
-    "join_semi",
-    "join_shuffle_hash",
-    "limit_offset",
-    "mm_bmp_ahash",
-    "mm_bmp_decode",
-    "mm_bmp_resize",
-    "mm_video_frames",
-    "mm_wav_decode",
-    "mm_wav_features",
-    "pipeline_pack_sequences",
-    "rfc_parse_valid",
-    "sample_stratified",
-    "sort_global",
-    "stream_cusum_alarms",
-    "stream_incremental_upsert",
-    "stream_kll_maintenance",
-    "stream_sketch_maintenance",
-    "text_repetition_filter",
-    "topk_orders",
-    "union_all",
-    "agg_approx_distinct_error",
-    "agg_approx_percentile_error",
-    "agg_percentiles",
-    "ann_bruteforce_topk",
-    # r11+ greens not listed trail in module order (every one re-earned
-    # green within the last five rounds; stream_stateful_v2 keeps its
-    # conditional registration, handled below)
-]
 
 
 def _registry() -> dict[str, QuerySpec]:
@@ -205,16 +54,7 @@ def _registry() -> dict[str, QuerySpec]:
         if overlap:
             raise ValueError(f"duplicate query names: {sorted(overlap)}")
         merged.update(mod.QUERIES)
-    # environment-gated queries: present in _PRIORITY for ordering but only
-    # registered where their runtime can be provisioned (see streaming.ops)
-    conditional = {"stream_stateful_v2"}
-    priority = [n for n in _PRIORITY if n in merged or n not in conditional]
-    missing = [n for n in priority if n not in merged]
-    if missing:
-        raise ValueError(f"_PRIORITY names not registered: {missing}")
-    ordered = {n: merged.pop(n) for n in priority}
-    ordered.update(merged)  # already-driver-green queries trail
-    return ordered
+    return merged
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -778,11 +778,11 @@ def _cc_labels_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_cluster_canonical).
 
     Delegates to ``graph.min_label_fixpoint`` — the POINTER-DOUBLING kernel
-    (r6 verdict item 3 unified this with graph_components' loop; the
-    previous one-hop propagation here was O(component diameter) rounds vs
-    O(log diameter) with shortcutting, and each saved round is a join +
-    checkpoint + count).  Isolated documents (no near-dup edges) enter as
-    their own singleton components via the full doc_id node set."""
+    shared with graph_components, on the graph module's one round driver
+    (O(log component diameter) rounds, each ONE checkpoint job that also
+    reports the moved-label count).  Isolated documents (no near-dup
+    edges) enter as their own singleton components via the full doc_id
+    node set."""
     from .graph import min_label_fixpoint
 
     # the pairs frame is already persisted by _jaccard_pairs_cached; the
@@ -824,8 +824,9 @@ def _cc_labels_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kernel shared with graph_components): every doc starts as its own "
     "label; each round takes the min over neighbors' labels AND the "
     "label's label, until a round changes nothing (O(log component "
-    "diameter) rounds; the only driver traffic is one changed-row COUNT "
-    "per round — the k-means trainer's topology).  The oracle computes "
+    "diameter) rounds of ONE job each: the round's checkpoint also "
+    "reports its changed-row count through DataFrame.observe).  The "
+    "oracle computes "
     "the same components by "
     "recursive-CTE transitive closure — an independent formulation, so the "
     "distributed fixpoint is value-checked end-to-end.  Output is one row "

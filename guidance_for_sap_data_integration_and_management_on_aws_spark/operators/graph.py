@@ -29,20 +29,23 @@ Scale design (100 TB):
   (no driver-side collect of data); iterations are fixed (3), so the oracle
   unrolls to plain CTEs; rank mass is fixed-point integer, so the result is
   bit-exact with no rounding anywhere.
-* **Iterative fixpoints** (components, k-core) cross the shared
-  _round_boundary each round — localCheckpoint on most rounds (flat
-  planning cost), a parquet state-table flush every 6th (caps the hidden
-  checkpoint-provenance ancestry that otherwise blows up driver-side past
-  ~11 generations; see _round_boundary) — and RAISE past their round
-  budget instead of returning an unconverged answer.  BFS expands the
-  FRONTIER only (never re-joins the visited set), checkpoints per level
-  (6-hop budget, under the flush cadence), and early-exits when the
-  frontier drains.
+* **Iterative fixpoints** (components, k-core, BFS, SSSP) run on one round
+  driver, ``fixpoint``: each round is ONE job, the _round_boundary
+  localCheckpoint (a parquet state-table flush every 6th caps the hidden
+  provenance ancestry that blows up driver-side past ~11 generations),
+  which also reports the round's changed-row count via DataFrame.observe.
+  Components and k-core RAISE past their budget instead of returning an
+  unconverged answer; for BFS (hops) and SSSP (edges) the budget is the
+  query's definition.  BFS expands the FRONTIER only.  PageRank stays a
+  lazy unroll: it launches no build job, and round boundaries would.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import shutil
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caches import memoize, register_cache
@@ -353,19 +356,12 @@ def min_label_fixpoint(nodes: DataFrame, bi: DataFrame, max_rounds: int) -> Data
     touch the full edge list again; on already-sparse graphs it costs one
     agg + one broadcast relabel and removes a round or two.
 
-    Step 2 runs the pointer-doubling rounds on the quotient: neighbor-min
-    equi-join + agg, label-shortcut equi-join (l(l(u)) — labels are
-    monotone non-increasing node ids so it always resolves), one
-    _round_boundary per round — localCheckpoint on most rounds, a parquet
-    state-table flush every 6th so planning AND driver cost stay flat at
-    any depth (see _round_boundary for why caching and unbounded
-    checkpoint chains both degrade on deep iteration) — and ONE aggregate
-    action for the convergence check, computed inside the materialized
-    projection so there is no extra old-vs-new join job.  The final frame
-    is re-checkpointed and the last scratch table deleted
-    (_finalize_iter_state), so callers always receive a block-backed,
-    lineage-free result.  Raises past the budget instead of returning an
-    unconverged labeling."""
+    Step 2 runs the pointer-doubling rounds on the quotient through the
+    shared round driver (:func:`fixpoint`, ONE job per round that also
+    counts moved labels): neighbor-min equi-join + agg, label-shortcut
+    equi-join (l(l(u)) — labels are monotone non-increasing node ids so
+    it always resolves).  Returns a block-backed, lineage-free result;
+    raises past the budget instead of returning an unconverged labeling."""
     # --- step 1: closed-neighborhood min + quotient contraction ---------
     nbr_min = bi.groupBy("a").agg(F.min("b").alias("nmin"))
     l0 = (
@@ -405,9 +401,10 @@ ITER_FLUSH_EVERY = 6
 def _round_boundary(
     df: DataFrame, rnd: int, prev_dir: str | None = None
 ) -> tuple[DataFrame, str | None]:
-    """Round boundary for iterative state: localCheckpoint on most rounds,
-    a parquet state-table flush every ITER_FLUSH_EVERY-th (returning a
-    FRESH scan and deleting the superseded table).
+    """The one job of a :func:`fixpoint` round, which also reports the
+    metrics observed on ``df``: localCheckpoint on most rounds, a parquet
+    state-table flush every ITER_FLUSH_EVERY-th (returning a FRESH scan
+    and deleting the superseded table).
 
     Why not localCheckpoint alone: the textbook per-round boundary keeps
     the PLAN flat, but Spark 4.1's Dataset.localCheckpoint carries an
@@ -433,82 +430,83 @@ def _round_boundary(
 
     out = scratch_dir("iter-state")
     df.write.mode("overwrite").parquet(out)
-    fresh = df.sparkSession.read.parquet(out)
+    fresh = df.sparkSession.read.schema(df.schema).parquet(out)  # no inference job
     if prev_dir is not None:
-        import shutil
-
         shutil.rmtree(prev_dir, ignore_errors=True)
     return fresh, out
 
 
-def _doubling_rounds(nodes: DataFrame, bi: DataFrame, max_rounds: int) -> DataFrame:
-    labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint(eager=True)
-    changed, state_dir = -1, None
-    # try/finally so a mid-round failure (a Spark job error inside a round)
-    # cannot leak the live state-table dir under .scratch; on the success
-    # and convergence-failure paths _finalize_iter_state already deleted it
-    # and the sweep is a no-op (round-10 advice)
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    max_rounds: int,
+    *,
+    what: str,
+    must_converge: bool,
+) -> DataFrame:
+    """THE round loop of the graph fixpoints (components, k-core, BFS, SSSP).
+
+    ``step(state, rnd)`` returns the next state plus a boolean ``__chg``
+    column.  Each round observes ``count_if(__chg)`` on it and crosses
+    _round_boundary, so ONE job both materializes the state and reports
+    the change count.  The loop stops after a round that changes no row.
+    At the budget it RAISES, naming ``what``, if ``must_converge``
+    (components, k-core: an unconverged state is a wrong answer), and
+    otherwise returns the budget-round state (BFS hops, SSSP edges: the
+    budget is the query's definition).  The result drops ``__chg`` and is
+    re-checkpointed (block-backed and lineage-free, as memoizing caches
+    such as dedup._CC_CACHE need); the last state-table dir is deleted on
+    every exit path."""
+    state_dir = None
     try:
         for rnd in range(max_rounds):
-            neighbor_min = (
-                bi.join(labels.withColumnRenamed("node", "a"), "a")
-                .groupBy(F.col("b").alias("node"))
-                .agg(F.min("lbl").alias("nmin"))
-            )
-            shortcut = (
-                labels.alias("l1")
-                .join(labels.alias("l2"), F.col("l1.lbl") == F.col("l2.node"))
-                .select(F.col("l1.node").alias("node"), F.col("l2.lbl").alias("smin"))
-            )
-            new = F.least(
-                "lbl", F.coalesce("nmin", "lbl"), F.coalesce("smin", "lbl")
-            )
-            stepped, state_dir = _round_boundary(
-                labels.join(neighbor_min, "node", "left")
-                .join(shortcut, "node", "left")
-                .select(
-                    "node", new.alias("new_lbl"), (new < F.col("lbl")).alias("__chg")
-                ),
+            obs = Observation()
+            state, state_dir = _round_boundary(
+                step(state, rnd).observe(obs, F.count_if("__chg").alias("n")),
                 rnd,
                 state_dir,
             )
-            changed = stepped.filter(F.col("__chg")).count()
-            labels = stepped.select("node", F.col("new_lbl").alias("lbl"))
+            changed = obs.get["n"]
             if changed == 0:
-                return _finalize_iter_state(labels, state_dir)
-        _finalize_iter_state(labels, state_dir)  # clean scratch before raising
-        raise RuntimeError(
-            f"pointer-doubling components did not converge within "
-            f"{max_rounds} rounds ({changed} labels still moving) — raise the "
-            "round budget (each round doubles the reachable label horizon)"
-        )
+                break
+        else:
+            if must_converge:
+                raise RuntimeError(
+                    f"{what} did not converge within {max_rounds} rounds "
+                    f"({changed} rows still changing) — raise its round budget"
+                )
+        return state.drop("__chg").localCheckpoint(eager=True)
     finally:
-        _sweep_iter_state(state_dir)
+        if state_dir is not None:
+            shutil.rmtree(state_dir, ignore_errors=True)
 
 
-def _sweep_iter_state(state_dir: str | None) -> None:
-    """Best-effort scratch sweep for iterative loops' exception paths.
-    Safe to run after :func:`_finalize_iter_state` (deleting an
-    already-deleted dir is a no-op), so callers wrap their round loop in
-    ``try/finally: _sweep_iter_state(state_dir)`` and any exit — normal,
-    convergence-failure, or a mid-round Spark job error — leaves no
-    state-table dir behind."""
-    if state_dir is not None:
-        import shutil
+def _doubling_rounds(nodes: DataFrame, bi: DataFrame, max_rounds: int) -> DataFrame:
+    def double(labels: DataFrame, rnd: int) -> DataFrame:
+        neighbor_min = (
+            bi.join(labels.withColumnRenamed("node", "a"), "a")
+            .groupBy(F.col("b").alias("node"))
+            .agg(F.min("lbl").alias("nmin"))
+        )
+        shortcut = (
+            labels.alias("l1")
+            .join(labels.alias("l2"), F.col("l1.lbl") == F.col("l2.node"))
+            .select(F.col("l1.node").alias("node"), F.col("l2.lbl").alias("smin"))
+        )
+        new = F.least("lbl", F.coalesce("nmin", "lbl"), F.coalesce("smin", "lbl"))
+        return (
+            labels.join(neighbor_min, "node", "left")
+            .join(shortcut, "node", "left")
+            .select("node", new.alias("lbl"), (new < F.col("lbl")).alias("__chg"))
+        )
 
-        shutil.rmtree(state_dir, ignore_errors=True)
-
-
-def _finalize_iter_state(df: DataFrame, state_dir: str | None) -> DataFrame:
-    """Close an iterative loop: checkpoint the FINAL frame (depth-1 from a
-    block- or parquet-backed round boundary — no provenance concern) so
-    callers get the block-backed, lineage-free output the memoizing caches
-    (dedup._CC_CACHE) document, then delete the loop's last scratch
-    state-table dir — otherwise it leaks per call, and a lazily-scanning
-    final frame would break if scratch were cleaned between consumers."""
-    out = df.localCheckpoint(eager=True)
-    _sweep_iter_state(state_dir)
-    return out
+    return fixpoint(
+        nodes.withColumn("lbl", F.col("node")).localCheckpoint(eager=True),
+        double,
+        max_rounds,
+        what="pointer-doubling components",
+        must_converge=True,
+    )
 
 
 @spec(
@@ -531,10 +529,9 @@ def _finalize_iter_state(df: DataFrame, state_dir: str | None) -> DataFrame:
     "O(diameter) one-hop propagation used on the (diameter-bounded) "
     "near-dup graph in dedup_connected_components — the variant that "
     "survives deep-chain topologies at 100 TB.  Each round is two "
-    "node-keyed equi-joins + one min-agg crossing the shared "
-    "_round_boundary (checkpoint most rounds, parquet state-table flush "
-    "every 6th — flat driver cost at any depth), one changed-count "
-    "collect; labels "
+    "node-keyed equi-joins + one min-agg and ONE job, the shared round "
+    "driver's checkpoint (parquet state-table flush every 6th — flat "
+    "driver cost at any depth), which also counts moved labels; labels "
     "are monotone non-increasing node ids so l(l(u)) always resolves.  "
     "Oracle: recursive-CTE transitive closure, component = MIN(reachable).",
 )
@@ -586,58 +583,32 @@ def _kcore_oracle() -> str:
     "iterative peeling: repeatedly drop nodes whose degree within the "
     "surviving subgraph is below k, until stable — the standard "
     "dense-subgraph extraction a curation pipeline runs for spam/bot "
-    "cluster detection and community seeding.  Each peel round is one "
-    "degree aggregation + two semi-joins on the node id (shuffle-by-key "
-    "only), materialized through the shared _round_boundary state table "
-    "so planning AND driver cost stay flat at any peel depth (the CC "
-    "precedent); one changed-count collect per round; raises past the "
-    "round budget instead of returning a half-peeled subgraph.  The "
+    "cluster detection and community seeding.  Each peel round drops the "
+    "edges last round flagged and flags those with an endpoint of degree "
+    "< k: two windows (per node pair, per node), no joins, and ONE job — "
+    "the shared round driver's checkpoint, which also reports the flag "
+    "count; raises past the round budget instead of returning a "
+    "half-peeled subgraph.  The "
     "oracle unrolls the same peeling (idempotent at the fixpoint), so "
     "agreement is exact.  Output: surviving nodes with their in-core "
     "degree (>= k by construction).",
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e0 = copurchase_edges(spark, sf_dir).select("src", "dst")
-    g = (
-        e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .toDF("a", "b")
-        .localCheckpoint(eager=True)
+    e0 = copurchase_edges(spark, sf_dir).select(
+        F.col("src").alias("a"), F.col("dst").alias("b")
     )
-    state_dir = None
-    # try/finally: a mid-round Spark failure must not leak the live
-    # state-table dir (round-10 advice; sweep is a no-op on clean exits)
-    try:
-        for rnd in range(KCORE_MAX_ROUNDS):
-            keep = (
-                g.groupBy(F.col("a").alias("node"))
-                .agg(F.count(F.lit(1)).alias("d"))
-                .filter(F.col("d") >= KCORE_K)
-                .select("node")
-            )
-            n_old = g.count()
-            # per-round state-table boundary (_round_boundary): keep is
-            # referenced twice + g once per round, the 3-parent provenance
-            # shape that makes deep localCheckpoint chains blow up driver-side
-            pruned, state_dir = _round_boundary(
-                g.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-                .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-                .select("a", "b"),
-                rnd,
-                state_dir,
-            )
-            n_new = pruned.count()
-            g = pruned
-            if n_new == n_old:
-                break
-        else:
-            _finalize_iter_state(g, state_dir)  # clean scratch before raising
-            raise RuntimeError(
-                f"k-core peeling did not stabilize within {KCORE_MAX_ROUNDS} rounds"
-            )
-        g = _finalize_iter_state(g, state_dir)
-    finally:
-        _sweep_iter_state(state_dir)
-    return g.groupBy(F.col("a").alias("node")).agg(
+    g0 = e0.unionAll(e0.select("b", "a")).withColumn("__chg", F.lit(False))
+    # an edge and its reverse share one pair partition: max(__chg) over it
+    # is "either endpoint was flagged", with no join back to a degree table
+    pair = Window.partitionBy(F.least("a", "b"), F.greatest("a", "b"))
+    degree = F.count(F.lit(1)).over(Window.partitionBy("a"))
+
+    def peel(g: DataFrame, rnd: int) -> DataFrame:
+        kept = g.withColumn("drop", F.max("__chg").over(pair)).filter(~F.col("drop"))
+        return kept.select("a", "b", (degree < KCORE_K).alias("__chg"))
+
+    core = fixpoint(g0, peel, KCORE_MAX_ROUNDS, what="k-core peeling", must_converge=True)
+    return core.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("core_degree")
     )
 
@@ -790,11 +761,11 @@ BFS_MAX_HOPS = 6  # fixed hop budget: bounds both engines' exploration
     "primitive the CC fixpoint does not "
     "answer.  Level-synchronous frontier expansion: each round joins the "
     "CURRENT FRONTIER ONLY (not the visited set) against the memoized "
-    "edge frame, anti-joins out already-visited nodes, and "
-    "localCheckpoints the per-round result so the plan stays flat; work "
-    "per round is |frontier-adjacent edges|, the textbook Pregel BFS.  "
-    "Early-exits when the frontier drains, so diameters below the budget "
-    "cost only their true number of rounds.  The oracle is the same walk "
+    "edge frame, anti-joins out already-visited nodes, and checkpoints "
+    "in ONE job that also reports the new level's size; work per round "
+    "is |frontier-adjacent edges|, the textbook Pregel BFS.  Early-exits "
+    "on an empty level, so diameters below the budget cost only their "
+    "true number of rounds.  The oracle is the same walk "
     "as a depth-capped recursive CTE with MIN-hop aggregation.",
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -802,7 +773,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     bi = e.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionAll(
         e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     )
-    dist = (
+    seed = (
         bi.groupBy("a")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("a"))
@@ -810,21 +781,21 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a").alias("node"), F.lit(0).cast("bigint").alias("hops"))
         .localCheckpoint(eager=True)
     )
-    frontier = dist
-    for h in range(1, BFS_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(bi, frontier["node"] == bi["a"])
+
+    def expand(dist: DataFrame, rnd: int) -> DataFrame:
+        level = (
+            dist.filter(F.col("hops") == rnd)
+            .select(F.col("node").alias("a"))
+            .join(bi, "a")
             .select(F.col("b").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .withColumn("hops", F.lit(h).cast("bigint"))
-            .localCheckpoint(eager=True)
+            .withColumn("hops", F.lit(rnd + 1).cast("bigint"))
+            .withColumn("__chg", F.lit(True))
         )
-        if not nxt.take(1):
-            break
-        dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return dist
+        return dist.select("node", "hops", F.lit(False).alias("__chg")).unionAll(level)
+
+    return fixpoint(seed, expand, BFS_MAX_HOPS, what="BFS", must_converge=False)
 
 
 SSSP_MAX_EDGES = 4  # relaxation rounds = max path length considered
@@ -860,8 +831,9 @@ SSSP_MAX_EDGES = 4  # relaxation rounds = max path length considered
     "weighted graph.  Each round relaxes the full tentative-distance "
     "frame through the memoized edge list (one equi-join + one min "
     "aggregation = the textbook distributed Bellman-Ford round; work per "
-    "round is O(|E|)), localCheckpointed so the plan stays flat, with an "
-    "early exit when a round improves nothing.  All arithmetic is exact "
+    "round is O(|E|)) and checkpoints in ONE job that also counts the "
+    "new or cheaper nodes, exiting early when there are none.  All "
+    "arithmetic is exact "
     "integers — no float path costs to drift.  The oracle enumerates the "
     "same <= "
     f"{SSSP_MAX_EDGES}-edge walks as a depth-capped recursive CTE with "
@@ -870,17 +842,13 @@ SSSP_MAX_EDGES = 4  # relaxation rounds = max path length considered
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = copurchase_edges(spark, sf_dir)
     maxw = e.agg(F.max("w").alias("m")).first()[0]
-    cost = (F.lit(maxw) + 1 - F.col("w")).cast("bigint")
+    cost = (F.lit(maxw) + 1 - F.col("w")).cast("bigint").alias("edge_cost")
     bi = (
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b"), cost.alias("cost"))
-        .unionAll(
-            e.select(
-                F.col("dst").alias("a"), F.col("src").alias("b"), cost.alias("cost")
-            )
-        )
+        e.select(F.col("src").alias("a"), F.col("dst").alias("b"), cost)
+        .unionAll(e.select(F.col("dst").alias("a"), F.col("src").alias("b"), cost))
         .localCheckpoint(eager=True)
     )
-    dist = (
+    seed = (
         bi.groupBy("a")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("a"))
@@ -888,30 +856,29 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a").alias("node"), F.lit(0).cast("bigint").alias("cost"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(SSSP_MAX_EDGES):
+
+    def relax(dist: DataFrame, rnd: int) -> DataFrame:
+        # each dist row carries its cost as "old"; a relaxed row carries
+        # null, so min(old) is the node's cost before this round
         relaxed = (
-            dist.join(bi, dist["node"] == bi["a"])
-            .select(F.col("b").alias("node"), (dist["cost"] + bi["cost"]).alias("cost"))
+            dist.select(F.col("node").alias("a"), "cost")
+            .join(bi, "a")
+            .select(
+                F.col("b").alias("node"),
+                (F.col("cost") + F.col("edge_cost")).alias("cost"),
+                F.lit(None).cast("bigint").alias("old"),
+            )
         )
-        nd = (
-            dist.unionAll(relaxed)
+        best = (
+            dist.select("node", "cost", F.col("cost").alias("old"))
+            .unionAll(relaxed)
             .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("cost").alias("cost"), F.min("old").alias("old"))
         )
-        # early exit: a round that improves no tentative distance is final
-        # (columns renamed — a checkpointed frame self-joined against its
-        # own derivation trips Spark's ambiguous-self-join analyzer)
-        changed = (
-            nd.select(F.col("node"), F.col("cost").alias("new_cost"))
-            .join(dist.select("node", F.col("cost").alias("old_cost")), "node", "left_outer")
-            .filter(F.col("old_cost").isNull() | (F.col("new_cost") < F.col("old_cost")))
-            .take(1)
-        )
-        dist = nd
-        if not changed:
-            break
-    return dist
+        chg = F.col("old").isNull() | (F.col("cost") < F.col("old"))
+        return best.select("node", "cost", chg.alias("__chg"))
+
+    return fixpoint(seed, relax, SSSP_MAX_EDGES, what="SSSP", must_converge=False)
 
 
 QUERIES: dict[str, QuerySpec] = {
