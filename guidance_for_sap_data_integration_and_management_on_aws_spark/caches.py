@@ -21,7 +21,8 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, SparkSession
 
 # (cache dict, key -> sf_dir extractor)
 _REGISTRY: list[tuple[dict, Callable]] = []
@@ -40,27 +41,34 @@ def register_cache(cache: dict, sf_of_key: Callable = lambda k: k[1]) -> dict:
 CACHE_MAX_ENTRIES = 4  # one live SF dir + headroom
 
 
+def _release(val) -> None:
+    """Unpersist a DataFrame value; other values (None, dicts, tuples) pin
+    nothing.  A persisted frame of an already-stopped session raises a
+    ``Py4JJavaError`` (a NullPointerException inside ``unpersist``), which
+    is harmless; any other error propagates."""
+    if isinstance(val, DataFrame):
+        try:
+            val.unpersist()
+        except Py4JJavaError:
+            pass
+
+
 def memoize(cache: dict, spark: SparkSession, sf_dir: str, build: Callable):
     """``cache[(applicationId, sf_dir)]``, calling ``build()`` on a miss.
     Any value is memoized, None included.  Insertion order is age, so the
-    oldest entry is evicted first; its ``unpersist`` may fail on a frame of
-    an already-stopped session, which is harmless."""
+    oldest entry is evicted (and released) first."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in cache:
         return cache[key]
     val = build()
     while len(cache) >= CACHE_MAX_ENTRIES:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # None, a non-persisted frame, or a stopped SparkSession
+        _release(cache.pop(next(iter(cache))))
     cache[key] = val
     return val
 
 
 def clear_caches(sf_dir: str | None = None) -> int:
-    """Drop (and unpersist, where the value supports it) every registered
+    """Drop (and release, see ``_release``) every registered
     cache entry for ``sf_dir`` — or every entry when ``sf_dir`` is None.
     Returns the number of entries released."""
     n = 0
@@ -93,10 +101,6 @@ def clear_caches(sf_dir: str | None = None) -> int:
         for key, s in keyed:
             if sf_dir is not None and s != sf_dir:
                 continue
-            val = cache.pop(key)
-            try:
-                val.unpersist()
-            except Exception:
-                pass  # non-frame value, or an already-stopped SparkSession
+            _release(cache.pop(key))
             n += 1
     return n

@@ -17,9 +17,10 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
 from fractions import Fraction
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caches import memoize, register_cache
@@ -203,47 +204,90 @@ def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# EXACT BITSET VERIFY (round 16, r15 verdict item 2 — guide §2.3 "shuffle
-# keys and metadata instead of payloads" applied to the verify joins, §1.2
-# per-task work): when the corpus's GLOBAL token vocabulary fits one
-# machine word, each doc's token set is losslessly one 64-bit mask (token
-# -> unique bit, injective), so |A∩B| = bit_count(maskA & maskB) EXACTLY —
-# no per-pair hash-set builds, no array copies, pure whole-stage-codegen
-# integer ops.  The r15 driver run spent 43-53 s in the array_intersect
-# verify (~19 µs/pair x 9.5M pairs: two OpenHashSet builds + a result
-# array per pair); the mask verify attaches 16 bytes per side instead of
-# two ~25-element long arrays.  The guard is measured from the data (a
-# 65-token corpus falls back to the array kernel, tested), not assumed.
+_TOKEN_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+
+
+def _hash_tokens(documents: DataFrame) -> DataFrame:
+    """(doc_id, toks): each document's distinct space-separated tokens as
+    xxhash64 values — the one token universe of the exact-Jaccard family
+    (prefix ranking, vocabulary probe, both verify kernels) and of the
+    MinHash signatures."""
+    return documents.select(
+        "doc_id",
+        F.transform(
+            F.array_distinct(F.split(F.col("text"), " ")), lambda w: F.xxhash64(w)
+        ).alias("toks"),
+    )
+
+
+def _hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The snapshot's ``_hash_tokens`` frame: Jaccard only needs
+    intersection/union SIZES, and intersecting long arrays is several times
+    cheaper than string arrays when millions of candidate pairs reach the
+    verify stage (64-bit collisions are negligible at corpus scale, and both
+    near-dup paths verify on the same hashed universe).  Tokenize+hash runs
+    on the parallelized scan, not the raw one-file fixture partition.
+
+    PERSISTED through the shared bounded memoizer, keyed by (app, sf_dir):
+    the frame feeds the vocabulary probe, the prefix build, the LSH
+    signature build AND both sides of the candidate-verify re-attach, so
+    without a cache the corpus is tokenized 3+ times per query; a
+    production job would persist per-run and unpersist in its teardown."""
+    return memoize(
+        _TOKEN_CACHE,
+        spark,
+        sf_dir,
+        lambda: _hash_tokens(
+            parallelize_small_scan(load(spark, sf_dir, "documents"), "doc_id")
+        ).persist(),
+    )
+
+
+# SMALL-VOCABULARY KERNELS (guide §2.3 "shuffle keys and metadata instead of
+# payloads", §2.4 "remove the shuffle outright"): when the corpus's GLOBAL
+# token vocabulary fits one machine word,
+# * the verify attaches one 64-bit mask per doc instead of its token array
+#   (the bit of a token is its rank in the sorted vocabulary, injective), so
+#   |A∩B| = bit_count(maskA & maskB) EXACTLY — measured at sf0.1, the
+#   array_intersect verify took 43-53 s and the mask verify ~1 s;
+# * the prefix build ranks each doc's tokens map-side against the collected
+#   df map instead of through a window over the exploded corpus.
+# ONE probe (_vocab_rows) decides both, memoized per snapshot together with
+# the mask frame (_vocab), and it logs the choice.  A wider vocabulary —
+# every real corpus — takes the array verify and the window ranking.  The
+# guard is measured from the data (a 65-token corpus falls back, tested).
 BITSET_VOCAB_MAX = 64
 
-_MASK_CACHE: dict[tuple[str, str], DataFrame | None] = register_cache({})
+_log = logging.getLogger(__name__)
 
 
-def _token_mask_frame(toks: DataFrame) -> DataFrame | None:
-    """(doc_id, mask, n) single-long bitset encoding of a (doc_id, toks)
-    frame, or None when the global vocabulary exceeds BITSET_VOCAB_MAX.
-    ``n`` = |set| (toks are distinct by construction) = bit_count(mask);
-    exactness: the vocab rank is injective into bit positions, so bits of
-    maskA & maskB correspond 1:1 to tokens of A∩B.
-
-    The <= 64-element vocabulary is COLLECTED (bounded: 65 longs — the
-    bloom-words precedent, and the limit caps the probe at any corpus
-    size) and embedded as a literal token -> bit map, so the whole build
-    is one collect + one map-side lookup + groupBy — the first cut's
-    distinct-probe + broadcast-join + 64-row window variant measured
-    5.1 s cold against this form's ~1 s."""
-    tok = toks.select("doc_id", F.explode("toks").alias("w"))
-    vocab = [
-        r[0] for r in tok.select("w").distinct().limit(BITSET_VOCAB_MAX + 1).collect()
-    ]
-    if len(vocab) > BITSET_VOCAB_MAX:
-        return None
-    vocab.sort()  # deterministic bit order (ascending signed-long, as sorted)
-    bit_of = F.create_map(
-        *[F.lit(x) for w, b in zip(vocab, range(len(vocab))) for x in (w, b)]
+def _vocab_rows(toks: DataFrame) -> list[Row] | None:
+    """The (w, df) rows of a (doc_id, toks) frame's global vocabulary, or
+    None when it holds more than BITSET_VOCAB_MAX tokens.  The collect is
+    bounded at BITSET_VOCAB_MAX + 1 rows at any corpus size."""
+    rows = (
+        toks.select(F.explode("toks").alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .limit(BITSET_VOCAB_MAX + 1)
+        .collect()
     )
+    return rows if len(rows) <= BITSET_VOCAB_MAX else None
+
+
+def _token_mask_frame(toks: DataFrame, vocab: list[Row]) -> DataFrame:
+    """(doc_id, mask, n) single-long bitset encoding of a (doc_id, toks)
+    frame over its probed ``vocab`` rows: the bit of a token is its rank in
+    the sorted vocabulary, embedded as a literal token -> bit map, so the
+    build is one map-side lookup + groupBy.  ``n`` = |set| (toks are
+    distinct by construction) = bit_count(mask); the rank is injective into
+    bit positions, so bits of maskA & maskB correspond 1:1 to tokens of
+    A∩B."""
+    ws = sorted(r["w"] for r in vocab)
+    bit_of = F.create_map(*[F.lit(x) for b, w in enumerate(ws) for x in (w, b)])
     return (
-        tok.groupBy("doc_id")
+        toks.select("doc_id", F.explode("toks").alias("w"))
+        .groupBy("doc_id")
         .agg(
             F.bit_or(
                 # call_function: the DataFrame shiftleft binding only takes
@@ -260,72 +304,88 @@ def _token_mask_frame(toks: DataFrame) -> DataFrame | None:
     )
 
 
-def _token_masks(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """Memoized per (session, sf_dir) like the token frame it derives from
-    (None — vocab too wide — is memoized too, so the probe count runs once)."""
-    return memoize(
-        _MASK_CACHE,
-        spark,
-        sf_dir,
-        lambda: _token_mask_frame(_hashed_token_sets(spark, sf_dir)),
+_VOCAB_CACHE: dict[tuple[str, str], tuple] = register_cache({})
+
+
+def _vocab(spark: SparkSession, sf_dir: str) -> tuple[list[Row] | None, DataFrame | None]:
+    """(vocabulary rows, mask frame) of the snapshot's hashed token
+    universe, or (None, None) when it is wider than BITSET_VOCAB_MAX.
+    Memoized per (session, sf_dir): the probe runs, and logs the kernels it
+    chose, once for every consumer (exact pairs, incremental, LSH)."""
+
+    def build():
+        toks = _hashed_token_sets(spark, sf_dir)
+        rows = _vocab_rows(toks)
+        wide = rows is None
+        _log.info(
+            "dedup vocabulary of %s: %s tokens; %s", sf_dir,
+            f">{BITSET_VOCAB_MAX}" if wide else len(rows),
+            "array verify, window prefix ranking" if wide
+            else "bitset verify, map-side prefix ranking",
+        )
+        return rows, None if wide else _token_mask_frame(toks, rows)
+
+    return memoize(_VOCAB_CACHE, spark, sf_dir, build)
+
+
+def _overlap(
+    cand: DataFrame, toks: DataFrame, masks: DataFrame | None
+) -> DataFrame:
+    """The one overlap kernel: (da, db, na, nb, i) for a (da, db) candidate
+    frame — both set sizes and |A∩B| as a double.  Broadcasts the 64-bit
+    masks when the vocabulary fits one word (i = bit_count(maskA & maskB)),
+    the token arrays otherwise (i = size(array_intersect), one hash-set
+    build per pair).  Callers get |A∪B| = na + nb - i by
+    inclusion-exclusion, never from an array_union.
+
+    EXPLICIT broadcast of the per-doc side: the candidate side is the big
+    one (quadratic pair mass in this dense fixture), and shuffling a token
+    ARRAY per candidate row is the whole cost — measured 72s shuffle vs
+    4-6s broadcast at sf0.1, with AQE flip-flopping between the two when
+    left to its own size estimates (the post-repartition tokenize frame has
+    no stats).  At corpus scales where the token table outgrows a
+    broadcast, the exact twin is oracle duty anyway — the production
+    near-dup path is the banded LSH."""
+    if masks is None:
+        sides = toks.select("doc_id", F.col("toks").alias("s"), F.size("toks").alias("n"))
+    else:
+        sides = masks.select("doc_id", F.col("mask").alias("s"), "n")
+
+    def side(key: str, n: str) -> DataFrame:
+        return F.broadcast(
+            sides.select(
+                F.col("doc_id").alias(key), F.col("s").alias(f"__s{key}"),
+                F.col("n").alias(n),
+            )
+        )
+
+    pairs = cand.join(side("da", "na"), "da").join(side("db", "nb"), "db")
+    sa, sb = F.col("__sda"), F.col("__sdb")
+    inter = (
+        F.size(F.array_intersect(sa, sb)) if masks is None
+        else F.bit_count(sa.bitwiseAND(sb))
     )
+    return pairs.select("da", "db", "na", "nb", inter.cast("double").alias("i"))
 
 
 def _exact_verify_stage(
     cand: DataFrame, toks: DataFrame, masks: DataFrame | None = None
 ) -> DataFrame:
-    """The quadratic exact-Jaccard VERIFY stage over a materialized
-    (da, db) candidate frame: broadcast-join the token sets (or, when the
-    vocabulary fits one machine word, their 64-bit masks — see
-    BITSET_VOCAB_MAX) onto both sides; |A∪B| by inclusion-exclusion.
-
-    EXPLICIT broadcast of the token-set table into the verify joins: the
-    candidate side is the big one (quadratic pair mass in this dense
-    fixture), and shuffling a token ARRAY per candidate row is the whole
-    cost — measured 72s shuffle vs 4-6s broadcast at sf0.1, with AQE
-    flip-flopping between the two when left to its own size estimates
-    (the post-repartition tokenize frame has no stats).  At corpus scales
-    where the token table outgrows a broadcast, the exact twin is oracle
-    duty anyway — the production near-dup path is the banded LSH."""
-    if masks is not None:
-        ma = masks.select(
-            F.col("doc_id").alias("da"), F.col("mask").alias("__ma"),
-            F.col("n").alias("na"),
-        )
-        mb = masks.select(
-            F.col("doc_id").alias("db"), F.col("mask").alias("__mb"),
-            F.col("n").alias("nb"),
-        )
-        pairs = cand.join(F.broadcast(ma), "da").join(F.broadcast(mb), "db")
-        inter = F.bit_count(F.col("__ma").bitwiseAND(F.col("__mb"))).cast("double")
-        jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 6)
-        return pairs.select("da", "db", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= JACCARD_T
-        )
-    sized = toks.select("doc_id", "toks", F.size("toks").alias("nt"))
-    ta = sized.select(
-        F.col("doc_id").alias("da"), F.col("toks").alias("ta"),
-        F.col("nt").alias("na"),
-    )
-    tb = sized.select(
-        F.col("doc_id").alias("db"), F.col("toks").alias("tb"),
-        F.col("nt").alias("nb"),
-    )
-    pairs = cand.join(F.broadcast(ta), "da").join(F.broadcast(tb), "db")
-    # |A∪B| = |A| + |B| - |A∩B| on these distinct-token arrays: one hash-set
-    # build per pair instead of two (array_union was ~half the verify CPU —
-    # ~480 CPU·s total at sf0.1's 9.5M candidates before this change)
-    inter = F.size(F.array_intersect("ta", "tb")).cast("double")
-    jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 6)
-    return pairs.select("da", "db", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= JACCARD_T
+    """The exact-Jaccard VERIFY stage over a (da, db) candidate frame:
+    (da, db, jaccard) for the pairs at Jaccard >= JACCARD_T, scored from
+    ``_overlap``'s sizes (masks when given, token arrays otherwise)."""
+    i = F.col("i")
+    jac = F.round(i / (F.col("na") + F.col("nb") - i), 6)
+    return (
+        _overlap(cand, toks, masks)
+        .select("da", "db", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= JACCARD_T)
     )
 
 
 def _jaccard_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    cand = _prefix_candidates(d, JACCARD_T)
     toks = _hashed_token_sets(spark, sf_dir)
+    vocab, masks = _vocab(spark, sf_dir)
     # MATERIALIZE the candidate frame before the verify (the prefix-frame
     # precedent): submitting tokenize -> prefix -> expansion -> dedup ->
     # verify -> cache-build as ONE job measured bimodal 26-96s for the
@@ -336,51 +396,15 @@ def _jaccard_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expansion lands at ~9s and the verify at ~3-13s, cold.  The
     # checkpoint is 9.5M narrow (da, db) rows ≈ 150 MB at sf0.1 — and this
     # exact twin is oracle duty; the production near-dup path is the LSH.
-    cand = cand.localCheckpoint(eager=True)
-    return _exact_verify_stage(cand, toks, _token_masks(spark, sf_dir))
-
-
-def _parallelize_scan(df: DataFrame) -> DataFrame:
-    """Tokenization is CPU-bound — see catalog.parallelize_small_scan."""
-    return parallelize_small_scan(df, "doc_id")
-
-
-_TOKEN_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
-def _hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, toks) with tokens replaced by xxhash64 values: Jaccard only
-    needs intersection/union SIZES, and intersecting long arrays is several
-    times cheaper than string arrays when millions of candidate pairs reach
-    the verify stage (64-bit collisions are negligible at corpus scale, and
-    both near-dup paths verify on the same hashed universe).  Tokenize+hash
-    runs on the parallelized scan, not the raw one-file fixture partition.
-
-    PERSISTED through the shared bounded memoizer, keyed by (app, sf_dir):
-    the frame feeds the LSH signature build AND both sides of the
-    candidate-verify re-attach (and the recall anchor runs the exact twin
-    on top), so without a cache the corpus is tokenized 3+ times per
-    query; a production job would persist per-run and unpersist in its
-    teardown."""
-
-    def build() -> DataFrame:
-        return parallelize_small_scan(
-            load(spark, sf_dir, "documents"), "doc_id"
-        ).select(
-            "doc_id",
-            F.transform(
-                F.array_distinct(F.split(F.col("text"), " ")), lambda w: F.xxhash64(w)
-            ).alias("toks"),
-        ).persist()
-
-    return memoize(_TOKEN_CACHE, spark, sf_dir, build)
+    cand = _prefix_candidates(toks, JACCARD_T, vocab).localCheckpoint(eager=True)
+    return _exact_verify_stage(cand, toks, masks)
 
 
 JACCARD_T = 0.6
 
 
 def _pruned_prefix_frame(
-    toks: DataFrame, t: float, probe_small_vocab: bool = True
+    toks: DataFrame, t: float, vocab: list[Row] | None
 ) -> tuple[DataFrame, int, int]:
     """Shared PPJoin prefix kernel (SSJoin prefix filter + the exact-integer
     threshold as p/q): from a (doc_id, toks) frame, build the MATERIALIZED
@@ -389,7 +413,8 @@ def _pruned_prefix_frame(
     * prefix guarantee: if |A∩B| >= ceil(t*|A|) the common tokens cannot
       all fit in A's ceil(t*|A|) - 1 element suffix, so any qualifying
       pair exposes a shared token inside both prefixes under the common
-      (df, w) total order;
+      (df, w) total order (w is the token hash; any global total order
+      keeps the guarantee);
     * |x| is computed scan-side and carried with each token row — avoids a
       second window pass over the exploded frame;
     * the frame is repartitioned to the full shuffle width and
@@ -399,47 +424,35 @@ def _pruned_prefix_frame(
       over the reused exchange sometimes collapses the whole expansion to
       ONE task (measured bimodal 2-5s vs 30-38s at sf0.1, per-node SQL
       metrics showing a single-task 29s HashAggregate).  Materializing
-      fixes the probe width AND computes the tokenize -> df-rank -> filter
-      pipeline once for every consumer — the graph.py edge-memoization
-      precedent.
+      fixes the probe width AND computes the df-rank -> filter pipeline
+      once for every consumer — the graph.py edge-memoization precedent.
 
     Returns (prefix_frame, p, q) with t = p/q EXACTLY (Fraction of the
     decimal literal), so callers state the length/positional prunes in
     integer arithmetic — no float-rounding edge can drop a boundary pair.
 
-    SMALL-VOCAB FAST PATH (round 16, guide §2.4): the general build ranks
-    via explode -> df join -> per-doc row_number window — a shuffle+sort
-    of the whole exploded corpus.  When the global vocabulary fits
-    BITSET_VOCAB_MAX the df table is collected (bounded: 65 rows) and the
-    SAME (df, w) total order is computed per row with array_sort over
-    struct(df, w) + slice — zero joins, zero window shuffles, identical
-    output (rank values 1..prefix_len under the identical total order;
-    path-equivalence fuzz-locked in tests/test_bitset_verify.py).
-    Measured (interleaved warm A/B at sf0.1): window path 1.11-1.41 s vs
-    fast path 0.66-0.84 s — and the removed exploded-corpus shuffle+sort
-    grows with corpus size while the collected map stays 64 rows.  Callers
-    whose
-    token universe STRUCTURALLY cannot fit one word pass
-    ``probe_small_vocab=False`` to skip the probe aggregation outright
-    (dedup_containment_pairs: k-gram shingle vocabularies grow as
-    vocab^k, so the probe pass is pure overhead there)."""
+    RANKING PATH: ``vocab`` is the probed (w, df) rows of ``toks``'
+    vocabulary (``_vocab_rows``), or None.  With rows, the (df, w) order is
+    computed per row with array_sort over struct(df, w) from the collected
+    df map + slice — zero joins, zero window shuffles (measured interleaved
+    warm A/B at sf0.1: 0.66-0.84 s vs 1.11-1.41 s for the window path).
+    With None, ranking goes explode -> df join -> per-doc row_number
+    window, a shuffle+sort of the whole exploded corpus.  Both emit the
+    identical rows (path-equivalence fuzz-locked in
+    tests/test_bitset_verify.py).  Callers whose token universe cannot fit
+    one word pass None without probing (dedup_containment_pairs: k-gram
+    shingle vocabularies grow as vocab^k)."""
     frac = Fraction(str(t))
     p, q = frac.numerator, frac.denominator
     spark = toks.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     n = F.size("toks")
-    plen = n - F.ceil(F.lit(t) * n) + 1  # >= 1 for t <= 1 and n >= 0
-    dfreq_rows = (
-        toks.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .limit(BITSET_VOCAB_MAX + 1)
-        .collect()
-    ) if probe_small_vocab else []
-    if probe_small_vocab and len(dfreq_rows) <= BITSET_VOCAB_MAX:
-        df_of = F.create_map(
-            *[F.lit(x) for r in dfreq_rows for x in (r["w"], r["df"])]
-        )
+
+    def plen(n: F.Column) -> F.Column:
+        return n - F.ceil(F.lit(t) * n) + 1  # >= 1 for t <= 1 and n >= 0
+
+    if vocab is not None:
+        df_of = F.create_map(*[F.lit(x) for r in vocab for x in (r["w"], r["df"])])
         keyed = F.array_sort(
             F.transform(
                 "toks",
@@ -452,23 +465,23 @@ def _pruned_prefix_frame(
             toks.select(
                 "doc_id",
                 n.alias("n"),
-                F.posexplode(F.slice(keyed, F.lit(1), plen)),
+                F.posexplode(F.slice(keyed, F.lit(1), plen(n))),
             )
             .select(
                 "doc_id", "n", (F.col("pos") + 1).alias("rnk"),
                 F.col("col.w").alias("w"),
             )
         )
-        return prefix.repartition(width, "doc_id").localCheckpoint(eager=True), p, q
-    tok = toks.select("doc_id", n.alias("n"), F.explode("toks").alias("w"))
-    dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-    ranked = tok.join(dfreq, "w").withColumn(
-        "rnk",
-        F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "w")),
-    )
-    prefix = ranked.filter(F.col("rnk") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1).select(
-        "doc_id", "n", "rnk", "w"
-    )
+    else:
+        tok = toks.select("doc_id", n.alias("n"), F.explode("toks").alias("w"))
+        dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
+        ranked = tok.join(dfreq, "w").withColumn(
+            "rnk",
+            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "w")),
+        )
+        prefix = ranked.filter(F.col("rnk") <= plen(F.col("n"))).select(
+            "doc_id", "n", "rnk", "w"
+        )
     return prefix.repartition(width, "doc_id").localCheckpoint(eager=True), p, q
 
 
@@ -493,14 +506,15 @@ def _ppjoin_prunes(
     )
 
 
-def _prefix_candidates(documents: DataFrame, t: float) -> DataFrame:
-    """Candidate (da, db) pairs for token-set Jaccard >= t: the shared
-    prefix kernel self-joined on the blocking token, pruned row-wise by
-    the PPJoin length/positional bounds before the expensive verify."""
-    toks = _parallelize_scan(documents).select(
-        "doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("toks")
-    )
-    prefix, p, q = _pruned_prefix_frame(toks, t)
+def _prefix_candidates(
+    toks: DataFrame, t: float, vocab: list[Row] | None
+) -> DataFrame:
+    """Candidate (da, db) pairs for token-set Jaccard >= t over a
+    (doc_id, toks) frame: the shared prefix kernel (ranked through
+    ``vocab``, see _pruned_prefix_frame) self-joined on the blocking
+    token, pruned row-wise by the PPJoin length/positional bounds before
+    the expensive verify."""
+    prefix, p, q = _pruned_prefix_frame(toks, t, vocab)
     a = prefix.alias("a")
     b = prefix.alias("b")
     return (
@@ -621,9 +635,10 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded xxhash64 minhashes (per-row array_min(transform(...)), no
     shuffle) -> 12 bands of r=2 (band key = xxhash64 of the band's two
     minhashes) via posexplode -> equi-self-join on (band, key) over
-    NARROW (doc_id, band, h) rows -> re-attach token sets by doc_id ->
-    exact Jaccard verify via array_intersect.  Everything JVM-side; only
-    16-byte rows cross the 12x-posexploded banded shuffle (plan-locked).
+    NARROW (doc_id, band, h) rows -> exact Jaccard verify through the
+    shared overlap kernel (masks or token sets re-attached by doc_id).
+    Everything JVM-side; only 16-byte rows cross the 12x-posexploded
+    banded shuffle (plan-locked).
     r=2 keeps candidates subquadratic: P(candidate | jac=0.2) ~ 0.15,
     P(candidate | jac>=0.6) >= 0.995.  Probabilistic output (no SQL
     oracle for the raw pair list) — the registry checks it through
@@ -650,65 +665,36 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # onto dead code.  Memoized per (session, sf_dir) — see
     # _lsh_candidates_cached.
     cand = _lsh_candidates_cached(spark, sf_dir)
-    return _lsh_verify_stage(cand, hashed, _token_masks(spark, sf_dir))
+    return _lsh_verify_stage(cand, hashed, _vocab(spark, sf_dir)[1])
 
 
 def _lsh_verify_stage(
     cand: DataFrame, hashed: DataFrame, masks: DataFrame | None = None
 ) -> DataFrame:
     """The banded-LSH VERIFY stage over a materialized (da, db) candidate
-    frame.  ``masks`` switches the per-pair intersection to the exact 64-bit
-    bitset kernel (see BITSET_VOCAB_MAX); the array kernel remains the
-    wide-vocabulary path."""
-    if masks is not None:
-        sized = masks.select("doc_id", F.col("mask"), F.col("n"))
-        ta = sized.select(
-            F.col("doc_id").alias("da"), F.col("mask").alias("__ma"),
-            F.col("n").alias("na"),
-        )
-        tb = sized.select(
-            F.col("doc_id").alias("db"), F.col("mask").alias("__mb"),
-            F.col("n").alias("nb"),
-        )
-    else:
-        # carry |A|,|B| with the token sets: |A∪B| = |A|+|B|-|A∩B|, so the
-        # exact verify costs ONE array_intersect per pair, never a union
-        sized = hashed.select("doc_id", "toks", F.size("toks").alias("n"))
-        ta = sized.select(
-            F.col("doc_id").alias("da"), F.col("toks").alias("ta"),
-            F.col("n").alias("na"),
-        )
-        tb = sized.select(
-            F.col("doc_id").alias("db"), F.col("toks").alias("tb"),
-            F.col("n").alias("nb"),
-        )
-    # broadcast the token sets into the verify (see _jaccard_pairs_cached)
-    pairs = cand.join(F.broadcast(ta), "da").join(F.broadcast(tb), "db")
-    # lossless length prune before the intersect: the verify keeps only
-    # J > 1 - LSH_DIST_T, which forces q*min(|A|,|B|) >= p*max(|A|,|B|)
-    # for that similarity as the exact fraction p/q — an integer compare
-    # that skips the array_intersect for ~15% of the band-collision
-    # candidates at sf0.1 (more on length-skewed corpora).  p/q derive
-    # from the SAME constant as the output filter so retuning the distance
-    # threshold can never silently turn the prune lossy.
+    frame: (da, db, jaccard_dist) for the pairs at distance < LSH_DIST_T,
+    scored from ``_overlap``'s sizes (masks when given, token arrays
+    otherwise).
+
+    Lossless length prune before the intersection: the verify keeps only
+    J > 1 - LSH_DIST_T, which forces q*min(|A|,|B|) >= p*max(|A|,|B|) for
+    that similarity as the exact fraction p/q — an integer compare on the
+    sizes that Catalyst pushes below the intersection, skipping it for ~15%
+    of the band-collision candidates at sf0.1 (more on length-skewed
+    corpora).  p/q derive from the SAME constant as the output filter, so
+    retuning the distance threshold can never silently turn the prune
+    lossy."""
     sim = Fraction(1) - Fraction(str(LSH_DIST_T))
-    pairs = pairs.filter(
-        sim.denominator * F.least("na", "nb")
-        >= sim.numerator * F.greatest("na", "nb")
-    )
-    inter = (
-        F.bit_count(F.col("__ma").bitwiseAND(F.col("__mb")))
-        if masks is not None
-        else F.size(F.array_intersect("ta", "tb"))
-    )
-    scored = pairs.select(
-        "da", "db", "na", "nb", inter.cast("double").alias("__i"),
-    )
-    jd = F.round(
-        F.lit(1.0) - F.col("__i") / (F.col("na") + F.col("nb") - F.col("__i")), 6
-    )
-    return scored.select("da", "db", jd.alias("jaccard_dist")).filter(
-        F.col("jaccard_dist") < LSH_DIST_T
+    i = F.col("i")
+    jd = F.round(F.lit(1.0) - i / (F.col("na") + F.col("nb") - i), 6)
+    return (
+        _overlap(cand, hashed, masks)
+        .filter(
+            sim.denominator * F.least("na", "nb")
+            >= sim.numerator * F.greatest("na", "nb")
+        )
+        .select("da", "db", jd.alias("jaccard_dist"))
+        .filter(F.col("jaccard_dist") < LSH_DIST_T)
     )
 
 
@@ -1004,7 +990,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="L2 INCREMENTAL near-dup (the fuzzy twin of dedup_incremental's "
     "ingest-tick topology): docs with doc_id %% 5 == 0 play the arriving "
     "batch and near-dup ONLY against the corpus — never corpus-vs-corpus.  "
-    "Both sides expose PPJoin prefixes under one shared (df, token) total "
+    "Both sides expose PPJoin prefixes under one shared (df, token hash) total "
     "order (prefix filtering is order-agnostic, so correctness is "
     "unaffected by computing df over the union), and the candidate join is "
     "batch-prefix x corpus-prefix: candidate volume is proportional to the "
@@ -1017,21 +1003,23 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _hashed_token_sets(spark, sf_dir)
+    vocab, masks = _vocab(spark, sf_dir)
     # one shared df order over the union (computed inside the shared prefix
     # kernel): any common total order preserves the prefix-filter guarantee
     # for cross-side pairs
-    prefix, p, q = _pruned_prefix_frame(toks, JACCARD_T)
+    prefix, p, q = _pruned_prefix_frame(toks, JACCARD_T, vocab)
     # token columns are RENAMED per side: bp/cp share lineage, so an
     # a["w"] == b["w"] predicate would resolve trivially true and silently
-    # degrade the equi-join to a cross product
+    # degrade the equi-join to a cross product.  The batch side plays da,
+    # the corpus side db, so the candidates feed the shared exact verify.
     bp = prefix.filter(F.col("doc_id") % 5 == 0).select(
-        F.col("doc_id").alias("batch_id"),
+        F.col("doc_id").alias("da"),
         F.col("n").alias("bn"),
         F.col("rnk").alias("brnk"),
         F.col("w").alias("bw"),
     )
     cp = prefix.filter(F.col("doc_id") % 5 != 0).select(
-        F.col("doc_id").alias("corpus_id"),
+        F.col("doc_id").alias("db"),
         F.col("n").alias("cn"),
         F.col("rnk").alias("crnk"),
         F.col("w").alias("cw"),
@@ -1044,48 +1032,11 @@ def dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("bn"), F.col("brnk"), F.col("cn"), F.col("crnk"), p, q
             ),
         )
-        .select("batch_id", "corpus_id")
-        .dropDuplicates(["batch_id", "corpus_id"])
+        .select("da", "db")
+        .dropDuplicates(["da", "db"])
     )
-    # exact bitset verify when the vocabulary fits one machine word (see
-    # BITSET_VOCAB_MAX): ~2.3M qualifying batch x corpus pairs at sf0.1 each
-    # paid an array_intersect hash-set build; the mask kernel is one AND +
-    # popcount per pair.  Wide vocabularies keep the array kernel.
-    masks = _token_masks(spark, sf_dir)
-    if masks is not None:
-        ta = masks.select(
-            F.col("doc_id").alias("batch_id"), F.col("mask").alias("__ma"),
-            F.col("n").alias("na"),
-        )
-        tb = masks.select(
-            F.col("doc_id").alias("corpus_id"), F.col("mask").alias("__mb"),
-            F.col("n").alias("nb"),
-        )
-        pairs = cand.join(F.broadcast(ta), "batch_id").join(
-            F.broadcast(tb), "corpus_id"
-        )
-        inter = F.bit_count(F.col("__ma").bitwiseAND(F.col("__mb"))).cast("double")
-        jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 6)
-        return (
-            pairs.select("batch_id", "corpus_id", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= JACCARD_T)
-        )
-    sized = toks.select("doc_id", "toks", F.size("toks").alias("nt"))
-    ta = sized.select(
-        F.col("doc_id").alias("batch_id"), F.col("toks").alias("ta"),
-        F.col("nt").alias("na"),
-    )
-    tb = sized.select(
-        F.col("doc_id").alias("corpus_id"), F.col("toks").alias("tb"),
-        F.col("nt").alias("nb"),
-    )
-    # broadcast the token sets into the verify (see _jaccard_pairs_cached)
-    pairs = cand.join(F.broadcast(ta), "batch_id").join(F.broadcast(tb), "corpus_id")
-    inter = F.size(F.array_intersect("ta", "tb")).cast("double")
-    jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 6)
-    return (
-        pairs.select("batch_id", "corpus_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
+    return _exact_verify_stage(cand, toks, masks).select(
+        F.col("da").alias("batch_id"), F.col("db").alias("corpus_id"), "jaccard"
     )
 
 
@@ -1216,7 +1167,7 @@ def _hashed_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gsets = _hashed_shingle_sets(spark, sf_dir)
     nonempty = gsets.filter(F.size("toks") > 0)
-    prefix, p, q = _pruned_prefix_frame(nonempty, CONTAIN_T, probe_small_vocab=False)
+    prefix, p, q = _pruned_prefix_frame(nonempty, CONTAIN_T, None)
     postings = nonempty.select(
         "doc_id", F.size("toks").alias("n"), F.explode("toks").alias("w")
     )

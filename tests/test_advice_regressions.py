@@ -196,14 +196,35 @@ def test_token_cache_evicts_oldest_and_survives_dead_frames(spark, sf_dir):
             dedup._TOKEN_CACHE[("app", f"dir{i}")] = f
         got = dedup._hashed_token_sets(spark, sf_dir)
         assert got is not None
-        # oldest entry (index 0) evicted FIRST — and its raising unpersist
-        # did not propagate; the newest fakes survive
+        # oldest entry (index 0) evicted FIRST — a non-DataFrame value is
+        # not released, so its raising unpersist never ran; the newest
+        # fakes survive
         assert ("app", "dir0") not in dedup._TOKEN_CACHE
         assert ("app", f"dir{len(fakes) - 1}") in dedup._TOKEN_CACHE
         assert not fakes[-1].unpersisted
     finally:
         dedup._TOKEN_CACHE.clear()
         dedup._TOKEN_CACHE.update(saved)
+
+
+def test_eviction_propagates_unexpected_unpersist_errors(spark):
+    """The memoizer releases an evicted DataFrame and forgives only the
+    Py4JJavaError of a stopped session's frame; any other error of
+    ``unpersist`` reaches the caller."""
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.caches import (
+        CACHE_MAX_ENTRIES,
+        memoize,
+    )
+
+    def boom():
+        raise RuntimeError("unpersist failed")
+
+    oldest = spark.range(1)
+    oldest.unpersist = boom
+    cache = {("app", "dir0"): oldest}
+    cache.update({("app", f"dir{i}"): None for i in range(1, CACHE_MAX_ENTRIES)})
+    with pytest.raises(RuntimeError, match="unpersist failed"):
+        memoize(cache, spark, "new", lambda: None)
 
 
 def test_corrupt_run_honors_arrow_batch_bound(monkeypatch):

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
     JACCARD_T,
+    _hash_tokens,
     _prefix_candidates,
+    _vocab_rows,
     dedup_exact,
     dedup_jaccard_pairs,
     minhash_lsh_pairs,
@@ -47,7 +49,8 @@ def test_prefix_filter_bounds_stop_token_candidates(spark):
         [(i, f"the uniq{i}a uniq{i}b uniq{i}c uniq{i}d") for i in range(50)],
         "doc_id BIGINT, text STRING",
     )
-    assert _prefix_candidates(docs, JACCARD_T).count() == 0
+    toks = _hash_tokens(docs)
+    assert _prefix_candidates(toks, JACCARD_T, _vocab_rows(toks)).count() == 0
 
 
 def test_prefix_filter_exact_vs_naive_blocking(spark):
@@ -73,9 +76,10 @@ def test_prefix_filter_exact_vs_naive_blocking(spark):
                 a, b = set(ra["toks"]), set(rb["toks"])
                 if len(a & b) / len(a | b) >= JACCARD_T:
                     want.add((ra["doc_id"], rb["doc_id"]))
+    hashed = _hash_tokens(docs)
     got = {
         (r["da"], r["db"])
-        for r in _prefix_candidates(docs, JACCARD_T).collect()
+        for r in _prefix_candidates(hashed, JACCARD_T, _vocab_rows(hashed)).collect()
     }
     assert want, "fixture must contain qualifying pairs"
     assert want <= got, f"prefix filter missed pairs: {want - got}"

@@ -250,8 +250,8 @@ def test_minhash_tokenizes_corpus_once(spark, sf_dir):
     RETURNED plan reads only lineage-free checkpoints — zero documents
     FileScans — while the masks themselves derive from the cached tokens."""
     from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-        _MASK_CACHE,
         _TOKEN_CACHE,
+        _VOCAB_CACHE,
         _hashed_token_sets,
         _lsh_band_candidates,
         minhash_lsh_pairs,
@@ -262,7 +262,7 @@ def test_minhash_tokenizes_corpus_once(spark, sf_dir):
     cached = _TOKEN_CACHE[key]
     assert cached.is_cached
     # fixture vocabulary fits one machine word -> mask verify active
-    assert _MASK_CACHE.get(key) is not None
+    assert _VOCAB_CACHE[key][1] is not None
     plan = executed_plan(df)
     assert "Scan ExistingRDD" in plan, plan  # checkpointed cand + masks
     assert sum(s.reads_table("documents") for s in file_scans(plan)) == 0, plan
@@ -277,12 +277,15 @@ def test_jaccard_prefix_exchanges_stay_narrow(spark, sf_dir):
     """The prefix-filter candidate join shuffles on the blocking token: that
     exchange must carry only (doc_id, w)-narrow rows, never token arrays."""
     from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
+        _hashed_token_sets,
         _prefix_candidates,
+        _vocab,
     )
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.catalog import load
 
     with _no_broadcast(spark):
-        df = _prefix_candidates(load(spark, sf_dir, "documents"), 0.6)
+        df = _prefix_candidates(
+            _hashed_token_sets(spark, sf_dir), 0.6, _vocab(spark, sf_dir)[0]
+        )
         exchanges = exchange_schemas(df)
     assert exchanges, "expected shuffles in the candidate plan"
     for ex in exchanges:
